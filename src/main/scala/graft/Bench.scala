@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — one JSON line on stdout. Runs the headline queries
   * (SparkEntry.benchQueries: the shuffle/join/scan-heavy representatives)
@@ -14,46 +13,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    def env(k: String, default: String) = sys.env.getOrElse(k, default)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r16 config block (guide §2.2/§6), every value A/B'd in-run at BOTH
-      // 32 and 8 cores (OPTIMIZATION_r16.md item #2) and env-parameterised
-      // so cluster deployments retune without a rebuild:
-      // - parallelismFirst=false: let AQE coalesce post-shuffle partitions
-      //   to the advisory size instead of preserving core-count
-      //   parallelism. 32c total 200.2→155.9 s, 8c 190.5→140.8 s; the
-      //   compute-dense exceptions (Σ df² pair tiles, levenshtein DP) pin
-      //   their own width via Dedup.explodingJoinParts, which AQE honors.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        env("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      // - advisory 4m is the LOCAL grain: sf0.1's per-core work quantum
-      //   (the 64m default folded 10-70 MB CPU-bound stages to ONE
-      //   partition — dedup_containment +47%). Production at 100 TB wants
-      //   the guide's 100 MB-1 GB reduce partitions: set
-      //   SPARK_GRAFT_ADVISORY_PARTITION=256m there; the operators place
-      //   no assumption on this value.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        env("SPARK_GRAFT_ADVISORY_PARTITION", "4m"))
-      // - 512m input splits cut scan-task count (guide §6); measured
-      //   neutral-to-positive at sf0.1 (155.9 vs 158.9 s), right-sized for
-      //   large sequential scans at 100 TB.
-      .config("spark.sql.files.maxPartitionBytes",
-        env("SPARK_GRAFT_MAX_PARTITION_BYTES", "512m"))
-      // - shuffle codec: zstd vs lz4 measured a WASH at sf0.1 (median
-      //   ratio 1.004 over the shuffle-heavy subset, 4 alternating JVMs)
-      //   — shuffles here are too small to differentiate, so the measured
-      //   default stays lz4; at 100 TB shuffle volumes zstd's better
-      //   ratio wins NIC bandwidth (guide §2.3) — set
-      //   SPARK_GRAFT_IO_CODEC=zstd there and re-measure.
-      .config("spark.io.compression.codec",
-        env("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession(cpus)
     // JVM/codegen warmup on the measured sfDir itself (no hardcoded fixture
     // path), guarded so a missing/odd fixture can't crash before measurement.
     // dedup_incremental_stored ALSO warms here: its first run against a fresh
@@ -85,7 +46,7 @@ object Bench {
     // divide a query's ratio by the rounds' anchor ratio.
     val calibration = (1 to 3).map { _ =>
       val t0 = System.nanoTime()
-      spark.range(0, 512L * 1000 * 1000, 1, cpus.toInt)
+      spark.range(0, 512L * 1000 * 1000, 1, cpus)
         .selectExpr("xxhash64(xxhash64(xxhash64(xxhash64(id)))) AS h")
         .selectExpr("bit_xor(h) AS x")
         .write.format("noop").mode("overwrite").save()
@@ -152,20 +113,18 @@ object Bench {
          |"warmup":$warmJson,"errors":$errJson,
          |"queries":$qs,
          |$perRep}""".stripMargin
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), full)
-    catch { case e: Throwable => System.err.println(s"[bench] artifact write failed: ${e.getMessage}") }
     // The process that refreshes the artifact heals the docs that quote it
-    // (SmokeSpec is assert-only and never writes): re-sync BASELINE.md's
-    // current-bench row + README counts whenever the DEFAULT repo artifact
-    // was just rewritten. A redirected SPARK_GRAFT_BENCH_OUT run (soak
-    // fixtures, targeted profiling) leaves the repo docs alone.
-    // r16 (VERDICT r15 #8): ALSO gated on the canonical local[32] config —
-    // the driver's lower-core scaling run (SPARK_GRAFT_CPUS=8) was silently
-    // rewriting BASELINE.md's headline row with 8-core numbers that
-    // cross-round readers compared against 32-core history.
-    if (out == "BENCH_full.json" && cpus == "32")
-      try println(s"[bench] docsync: ${DocSync.sync().mkString(", ")}")
-      catch { case e: Throwable => System.err.println(s"[bench] docsync failed: ${e.getMessage}") }
+    // (SmokeSpec is assert-only and never writes): whenever the default
+    // repo artifact is rewritten, at any core count, re-sync BASELINE.md's
+    // current-bench row + README counts. The row states local[n] from the
+    // artifact's own `cpus` field, so every core count is labelled as
+    // such. A redirected SPARK_GRAFT_BENCH_OUT run (soak fixtures,
+    // targeted profiling) leaves the repo docs alone.
+    try {
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(out), full)
+      if (out == "BENCH_full.json")
+        println(s"[bench] docsync: ${DocSync.sync().mkString(", ")}")
+    } catch { case e: Throwable => System.err.println(s"[bench] artifact write/docsync failed: ${e.getMessage}") }
     // COMPACT driver-parseable line, LAST on stdout (VERDICT r15 #1): no
     // per-query map (that lives in the artifact above and in the legacy
     // line), so the driver's bounded tail capture always sees the whole

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Soak driver for the embedding-dedup family (kept tooling, not library
   * API): times the pruned vs exact cosine/keepers twins against the
   * [[SoakGen]]-produced fixtures at sf1/sf10. Modes:
@@ -19,12 +17,7 @@ object EmbeddingSoak {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/sf1")
     val mode = if (args.length > 1) args(1) else "tight"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     mode match {
       case "tight" =>
         val emb = spark.read.parquet(s"$dir/embeddings_tight.parquet")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Deterministic ~10×-of-sf0.1 soak fixture generator for the dedup/ANN
   * heavy hitters (`documents` + `embeddings`) plus, since r7, an `events`
   * table mirroring the driver fixture's density (so the events family —
@@ -88,13 +86,7 @@ object SoakGen extends Serializable {
     val out = args.headOption.getOrElse("/tmp/sf1")
     val nDocs = if (args.length > 1) args(1).toInt else 50000
     val nVecs = if (args.length > 2) args(2).toInt else 20000
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     import spark.implicits._
 
     // documents: ~4% of ids clone an earlier ORGANIC doc exactly, a further

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Soak driver for the r10 stored-index additions (kept tooling, not
@@ -50,12 +49,7 @@ object StoreSoak {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/sf1")
     val mode = if (args.length > 1) args(1) else "bloom"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     mode match {
       case "bloom" =>
         val docs = spark.read.parquet(s"$dir/documents.parquet")

@@ -947,7 +947,8 @@ object Dedup {
     // label-pointer chains stay short, so pointer doubling degrades to
     // one-hop frontier propagation: 8 distributed rounds of ~0.4 s each on
     // 4 KB of data (measured; extra L(L(u)) jumps per round did not reduce
-    // the round count — ProfR15 comp2). The guide-§8 move is to use what
+    // the round count — OPTIMIZATION_r15.md, "Connected-components
+    // closure"). The guide-§8 move is to use what
     // the optimizer cannot know: the remainder is TINY, so its closure
     // belongs in one bounded executor task (classic union-find, min-root
     // merging — the same unique fixpoint), not in O(diameter) Spark jobs.

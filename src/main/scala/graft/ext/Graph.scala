@@ -67,7 +67,7 @@ object Graph {
     // sort-merge-joining by estimate — scale-adaptive by construction
     // (too-big sides at 100× stay SMJ). Measured sf0.1 min-of-2:
     // 9.36 s → 6.49 s uncapped, 2.84 s → 1.69 s capped, fingerprints
-    // bit-identical (ProfR15 tri2).
+    // bit-identical (OPTIMIZATION_r15.md, "Graph family").
     val e = edges.select(col("a"), col("b")).materialize()
     val deg = e.select(col("a").as("id")).unionAll(e.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("degree"))

@@ -4,7 +4,6 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.ext.Materialize._
 
 /** One document arriving on the ingest stream: the `documents` columns plus
   * the arrival timestamp that drives the dedup watermark. */
@@ -558,6 +557,19 @@ object DocStreams {
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
   }
 
+  /** A micro-batch replays from its source offsets on failure, so nothing
+    * inside a `foreachBatch` body needs a reliable checkpoint: its own
+    * materializations are `localCheckpoint`, and this pins the batch
+    * operators it calls (their `materialize()` seam) to the local path
+    * too. Under `spark.graft.materialize.reliable=true` they would
+    * otherwise leave never-cleaned checkpoint directories on every
+    * trigger. `batch` runs on the stream's own cloned session, so the
+    * caller's session keeps its conf. */
+  private def localOnly(batch: DataFrame): DataFrame = {
+    batch.sparkSession.conf.set("spark.graft.materialize.reliable", "false")
+    batch
+  }
+
   /** The full CONTINUOUS CORPUS LOOP — streaming ingest that GROWS the
     * historical band store it dedups against: per micro-batch,
     *
@@ -590,7 +602,7 @@ object DocStreams {
       .parquet(srcDir)
     docs.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.select("doc_id", "text", "lang", "source").materialize()
+        val b = localOnly(batch).select("doc_id", "text", "lang", "source").localCheckpoint()
         val hitStore = graft.ext.Dedup
           .incrementalStored(b.select("doc_id", "text"), storeDir, threshold)
           .select(col("inc_id").as("doc_id")).distinct()
@@ -601,7 +613,7 @@ object DocStreams {
         val accepted = b
           .join(hitStore, Seq("doc_id"), "left_anti")
           .join(nonKeep, Seq("doc_id"), "left_anti")
-          .materialize() // one materialization feeds both appends
+          .localCheckpoint() // one materialization feeds both appends
         accepted.write.mode("append").parquet(outDir)
         graft.ext.Dedup.appendToBandStore(accepted.select("doc_id", "text"), storeDir)
         ()
@@ -650,7 +662,7 @@ object DocStreams {
     docs.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // one materialization feeds both the probe and the store append
-        val b = batch.select("doc_id", "text").materialize()
+        val b = localOnly(batch).select("doc_id", "text").localCheckpoint()
         graft.ext.Dedup.spanDedupOnceStored(b, storeDir, k)
           .write.mode("append").parquet(outDir)
         graft.ext.Dedup.appendToSpanStore(b, storeDir, k)

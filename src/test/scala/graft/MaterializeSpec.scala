@@ -21,8 +21,13 @@ class MaterializeSpec extends AnyFunSuite {
   }
 
   test("reliable=true writes through the reliable checkpoint dir; results identical; clusters end-to-end unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    spark.sparkContext.setCheckpointDir(dir)
+    val dir = java.nio.file.Paths.get(SparkTestSession.checkpointDir)
+    // the dir is shared with other suites: count files, not emptiness
+    def files() = {
+      val s = java.nio.file.Files.walk(dir)
+      try s.filter(java.nio.file.Files.isRegularFile(_)).count() finally s.close()
+    }
+    val filesBefore = files()
     spark.conf.set("spark.graft.materialize.reliable", "true")
     try {
       val df = spark.range(0, 50).select(col("id"), (col("id") + 7).as("v"))
@@ -30,9 +35,7 @@ class MaterializeSpec extends AnyFunSuite {
       assert(m.collect().map(_.getLong(1)).sorted.toSeq ===
         (7L until 57L).toSeq)
       // the reliable path must actually land blocks in the checkpoint dir
-      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(java.nio.file.Files.isRegularFile(_)).count()
-      assert(files > 0, s"reliable materialize left $dir empty")
+      assert(files() > filesBefore, s"reliable materialize wrote nothing to $dir")
       // end-to-end through every materialize site in the closure path:
       // same labels as the conf-off default
       val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 4L)).toDF("a", "b")
@@ -40,9 +43,6 @@ class MaterializeSpec extends AnyFunSuite {
       spark.conf.set("spark.graft.materialize.reliable", "false")
       val local = ext.Dedup.clusters(pairs).collect().map(_.toSeq).toSeq
       assert(reliable === local)
-    } finally {
-      spark.conf.set("spark.graft.materialize.reliable", "false")
-      graft.ops.Scale.deleteRecursively(new java.io.File(dir))
-    }
+    } finally spark.conf.set("spark.graft.materialize.reliable", "false")
   }
 }
