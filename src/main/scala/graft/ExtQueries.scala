@@ -4727,13 +4727,4 @@ object ExtQueries {
         |FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id
         |ORDER BY doc_id""".stripMargin
   )
-
-  /** Bench-set policy (SparkEntry quotes it): EVERY ext query benches —
-    * each one is data-shaped (a scan/shuffle/join over the fixture
-    * tables), so there is nothing to exclude; the parity module instead
-    * benches its shuffle/join representatives and leaves out its
-    * metadata-only ops (DDL/schema/template strings). Derived from the
-    * registry, not hand-listed, so a newly registered query can never be
-    * silently unbenched. */
-  def benchQueries: Seq[String] = queries.keys.toSeq.sorted
 }

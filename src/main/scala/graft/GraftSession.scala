@@ -2,11 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one SparkSession factory. Every main (Bench, Verify, PlanDump,
-  * StreamBench, the soaks) and the test session build through [[apply]],
-  * so Verify checks the oracle under exactly the conf Bench times. The
-  * only parameter is the core count; everything else is a constant here.
-  * Per-tool extras are `spark.conf.set` at the call site. */
+/** The one SparkSession factory. [[Verify]] and the test session build
+  * through [[apply]], so the oracle check and the specs run under one
+  * conf. The only parameter is the core count; everything else is a
+  * constant here. */
 object GraftSession {
 
   /** Core count: `SPARK_GRAFT_CPUS` when set, else this machine's

@@ -28,19 +28,4 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     ParityQueries.oracles ++ ExtQueries.oracles
-
-  /** Headline queries for the benchmark (graft.Bench). Policy: every
-    * ExtQueries entry benches (all are data-shaped — derived from the
-    * registry in ExtQueries.benchQueries, so nothing can be silently
-    * unbenched); the parity surface benches its shuffle/join/scan
-    * representatives below and excludes only metadata-shaped ops
-    * (DDL/schema/template generation, which produce strings, not data
-    * plans). */
-  def benchQueries: Seq[String] = Seq(
-    "extract_shape_lineitem", "soql_groupby_agg", "soql_having",
-    "soql_orderby_limit", "soql_rollup", "soql_count_distinct",
-    "relationship_flatten", "soql_child_to_parent", "soql_fact_join",
-    "soql_semi_join", "soql_parent_child_subquery", "soql_dot_path_groupby",
-    "extract_pk_chunked"
-  ) ++ ExtQueries.benchQueries
 }

@@ -22,7 +22,8 @@ object Scale {
     coalesce(length(c.cast("string")) % 1, lit(0))
 
   /** Recursive local-filesystem delete — the store-lifecycle cleanup used
-    * by the band-store race loser and the compaction swap. */
+    * by the band-store race loser and the compaction swap, and Verify's
+    * per-query output reset. */
   private[graft] def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete(); ()

@@ -557,6 +557,44 @@ class EventStreamsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("dedup and anomaly state stay O(active keys) as event time passes the watermark") {
+    implicit val sqlCtx = spark.sqlContext
+    val delay = 2 * 3600000L // both operators' default 2-hour watermark
+    val step = 3600000L      // each micro-batch advances event time one hour
+    val types = Seq("click", "view", "purchase")
+    val input = MemoryStream[Event]
+    val dedup = EventStreams.dedupEvents(input.toDS()).writeStream
+      .format("memory").queryName("dedup_bound").outputMode("append").start()
+    val anomaly = EventStreams.anomalyHourly(input.toDS()).writeStream
+      .format("memory").queryName("anomaly_bound").outputMode("append").start()
+    def stateRows(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
+      q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+    try {
+      var seen = Vector.empty[Event]
+      for (b <- 0 until 12) {
+        val fresh = (0 until 10).map(j => Event(b * 10L + j, new Timestamp(1000 + b * step + j * 6 * 60000L),
+          42L, types(j % types.size), 1.0))
+        // replays of the previous batch's ids: same key, later delivery
+        val replays = seen.takeRight(3).map(e => e.copy(ts = new Timestamp(1000 + b * step)))
+        // watermark used for eviction in this batch: max event time seen so
+        // far minus the delay; dedup keeps an id until ts + delay passes it
+        val wm = if (seen.isEmpty) Long.MinValue else seen.map(_.ts.getTime).max - delay
+        seen ++= fresh
+        input.addData(fresh ++ replays: _*)
+        dedup.processAllAvailable(); anomaly.processAllAvailable()
+        val dedupRows = stateRows(dedup)
+        val inHorizon = seen.count(e => e.ts.getTime + delay >= wm)
+        assert(dedupRows <= inHorizon, s"batch $b: dedup state $dedupRows > $inHorizon ids in horizon")
+        assert(stateRows(anomaly) === types.size,
+          s"batch $b: anomaly state is not one row per event type")
+      }
+      val finalRows = stateRows(dedup)
+      assert(finalRows > 0)
+      assert(finalRows * 2 < seen.size, s"dedup state $finalRows not well below ${seen.size} distinct ids")
+      assert(spark.table("dedup_bound").count() === seen.size)
+    } finally { dedup.stop(); anomaly.stop() }
+  }
+
   test("streaming tumbling window emits finalized hourly windows matching batch expressions") {
     implicit val sqlCtx = spark.sqlContext
     val h = 3600000L
