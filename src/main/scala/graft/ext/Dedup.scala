@@ -859,197 +859,122 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Connected components over near-dup pairs → cluster ids. Pair lists
-    * aren't actionable on their own: the dedup decision ("keep one doc per
-    * duplicate GROUP") needs transitive closure — if A~B and B~C, one
-    * keeper among {A,B,C}, even though A and C never paired.
-    *
-    * Iterative min-label propagation to fixpoint: each round every node
-    * adopts the smallest label among itself and its neighbors — the
-    * primitive inside GraphX CC / large-star-small-star. Rounds needed =
-    * graph diameter ≤ O(log n) for the squat near-dup clusters; each round
-    * is one co-partitioned edge-label join + partial-min shuffle (never
-    * materializes components in one task). `localCheckpoint` truncates the
-    * growing lineage per round — standard for iterative Spark algorithms.
-    * The fixpoint is unique, so results are independent of round count. */
+  /** Connected components over near-dup pairs → (doc_id, cluster_id), each
+    * node labelled with its component MINIMUM. Pair lists aren't actionable
+    * on their own: the dedup decision ("keep one doc per duplicate GROUP")
+    * needs transitive closure — if A~B and B~C, one keeper among {A,B,C},
+    * even though A and C never paired. The fixpoint is unique, so every
+    * path of [[clustersWithRounds]] yields the same labels. */
   def clusters(pairs: DataFrame): DataFrame = clustersWithRounds(pairs)._1
 
-  /** [[clusters]] plus the round count (spec hook). `shortcut` enables
-    * POINTER DOUBLING after each propagation: L(u) ← L(L(u)) — every label
-    * jumps the whole currently-known chain instead of one hop, so rounds
-    * drop from O(diameter) to O(log diameter) (the Shiloach-Vishkin
-    * shortcut; the same round-compression large-star/small-star buys,
-    * expressed as one extra co-partitioned self-join of the SMALL label
-    * table). The fixpoint — every node labeled its component minimum — is
-    * unique, so shortcutting changes round count only, never the result
-    * (spec-asserted: chain fixture equal labels, far fewer rounds). */
+  /** [[clusters]] plus a round count (spec hook): distributed propagation
+    * rounds, plus one for the map-side pass of the production path.
+    *
+    * `shortcut = true` (production) is a TWO-LEVEL UNION-FIND with min-root
+    * merging ([[UnionFind]]):
+    *  1. Inside the pair stage, a narrow `mapPartitions` closes each
+    *     partition's pairs and emits its spanning forest — one
+    *     (node, root) row per node ≠ root. A clique-dense near-dup
+    *     partition (a k-clone family is k²/2 pairs; the sf10 keepers
+    *     closure read 44.7M of them) collapses map-side to k−1 rows, the
+    *     pair relation is scanned once, and task memory is O(distinct
+    *     nodes in the partition). The forest is materialized once; its row
+    *     count comes from that same job through an accumulator (a task
+    *     re-run can only overcount, which picks the distributed path —
+    *     same labels).
+    *  2. At execute, when the forest has at most
+    *     `spark.graft.clusters.maxLocalEdges` rows (default 4M; 0 = always
+    *     distributed), one `coalesce(1)` task runs the same union-find over
+    *     it and emits the labels, sorted within that one partition. The
+    *     contracted remainder of a near-dup graph is tiny but
+    *     chain-shaped, and on chains distributed propagation degrades to
+    *     one Spark round per hop (OPTIMIZATION_r15.md,
+    *     "Connected-components closure").
+    *     Footprint (ADVICE r15): 4M rows reach ≤8M nodes; the primitive
+    *     map keeps 17 B/slot at ≤50% load, worst case ~270 MB in one
+    *     executor task; lower the conf for smaller executors. Above the
+    *     ceiling, min-label propagation with pointer doubling runs over
+    *     the forest edges, so no path assumes a bounded task.
+    * Building the result runs one Spark job, the forest materialization.
+    *
+    * `shortcut = false` is the reference the production path is spec'd
+    * against: plain one-hop min-label propagation over the raw pairs
+    * (~diameter rounds). */
   private[graft] def clustersWithRounds(pairs: DataFrame,
                                         shortcut: Boolean = true): (DataFrame, Int) = {
-    // checkpoint the PAIR list ONCE — not the 2× symmetrized edge list:
-    // every consumer below (init's per-node min, the contraction pass)
-    // needs exactly one scan of the pair relation, and on a clique-dense
-    // near-dup graph the pairs ARE the big thing (the sf10 soak fixture's
-    // keepers closure reads 44.7M of them). Materializing the symmetrized
-    // form doubled the cached bytes past driver storage and thrashed the
-    // MemoryStore (r9: 38.8 s keepers of which the pair stage was 12.5 s);
-    // serialized storage keeps the working set compact — UnsafeRow pairs
-    // are ~30 bytes — and the both-direction view is derived per consumer
-    // with a map-side explode, which shuffles nothing extra. Without the
-    // checkpoint each consumer would re-execute the whole upstream
-    // pair-generation DAG (for minhashClusters: the full LSH pipeline).
-    val p = pairs.select(col("a"), col("b"))
-      .materialize(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // per-node min-neighbor label in ONE scan of p: both directions
-    // explode map-side and partial-min before the exchange, so the
-    // shuffle carries ~node-count rows, never 2× pairs
-    val init = p.select(explode(array(
-        struct(col("a").as("id"), col("b").as("nbr")),
-        struct(col("b").as("id"), col("a").as("nbr")))).as("e"))
-      .select(col("e.id").as("id"), least(col("e.id"), col("e.nbr")).as("label"))
-      .groupBy("id").agg(min("label").as("label"))
-      .materialize()
+    // serialized storage: both materializations below can hold a
+    // pair-sized relation (UnsafeRow pairs are ~30 bytes)
+    val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+    val ab = pairs.select(col("a"), col("b"))
+    def ordered(labels: DataFrame): DataFrame =
+      labels.select(col("id").as("doc_id"), col("label").as("cluster_id")).orderBy("doc_id")
     if (!shortcut) {
-      // plain one-hop propagation, kept as the reference the shortcut
-      // path is spec'd against (same unique fixpoint, ~diameter rounds)
-      val edges = p.select(col("a").as("id"), col("b").as("nbr"))
-        .unionAll(p.select(col("b").as("id"), col("a").as("nbr")))
-      val (labels, rounds) = propagateLoop(edges, init, shortcut = false)
-      return (labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-        .orderBy("doc_id"), rounds)
+      val (labels, rounds) = propagateLoop(ab.materialize(ser), shortcut = false)
+      return (ordered(labels), rounds)
     }
-    // CONTRACT FIRST, then iterate on the contracted graph: the raw pair
-    // relation of a near-dup corpus is clique-dense (a k-clone family is
-    // k²/2 pairs), so a single pass that maps every pair through the
-    // min-neighbor labels and distincts the surviving label pairs
-    // collapses cliques to NOTHING — the r8 sf10 pruned-keepers relation
-    // (44.7M edges over √n tight clusters) contracts to ~0 rows, and the
-    // pointer-doubling rounds then run on the contracted remainder
-    // instead of re-joining 2×44.7M rows every round. Label pairs are
-    // unordered, so contracting the pair relation directly yields the
-    // same graph as contracting the symmetrized edges at half the scan;
-    // both endpoint lookups are broadcast joins against the small
-    // per-node label table, pipelined in one scan of p. Chains and other
-    // sparse shapes survive contraction near-unchanged and pay one extra
-    // pass, which the per-round savings repay immediately.
-    val contracted = p
-      .join(init.select(col("id").as("a"), col("label").as("ca")), "a")
-      .join(init.select(col("id").as("b"), col("label").as("cb")), "b")
-      .filter(col("ca") =!= col("cb"))
-      .select(least(col("ca"), col("cb")).as("a"),
-        greatest(col("ca"), col("cb")).as("b"))
-      .distinct()
-      .materialize()
-    // r15: FINISH SMALL REMAINDERS IN ONE TASK. After clique contraction
-    // the remainder of a near-dup graph is orders smaller than the corpus
-    // (sf0.1 capped simhash graph: 7,697 pairs → 508 contracted edges) but
-    // CHAIN-shaped, and on chain-shaped graphs with arbitrary id layout the
-    // label-pointer chains stay short, so pointer doubling degrades to
-    // one-hop frontier propagation: 8 distributed rounds of ~0.4 s each on
-    // 4 KB of data (measured; extra L(L(u)) jumps per round did not reduce
-    // the round count — OPTIMIZATION_r15.md, "Connected-components
-    // closure"). The guide-§8 move is to use what
-    // the optimizer cannot know: the remainder is TINY, so its closure
-    // belongs in one bounded executor task (classic union-find, min-root
-    // merging — the same unique fixpoint), not in O(diameter) Spark jobs.
-    // Guarded by an edge-count ceiling (conf `spark.graft.clusters.maxLocalEdges`,
-    // default 4M edges). Honest footprint math (ADVICE r15): 4M edges reach
-    // ≤8M distinct nodes; the open-addressing primitive map below keeps a
-    // parent entry per node at 17 B/slot and ≤50% load — worst case ~270 MB
-    // in ONE executor task (plus the input partition), which fits ordinary
-    // 4 GB executors; lower the conf where they are smaller. Above the
-    // ceiling — a corpus whose CONTRACTED near-dup graph still has >4M
-    // inter-cluster edges — the distributed pointer-doubling loop below
-    // runs unchanged, so the 100 TB path needs no new memory assumption.
-    // Fingerprint-identical by spec and by the oracle suite (the fixpoint
-    // is unique).
     val spark = pairs.sparkSession
-    // malformed conf values fall back to the default LOUDLY rather than
-    // failing every clusters consumer with a bare NumberFormatException
-    val maxLocalEdges = spark.conf.getOption("spark.graft.clusters.maxLocalEdges")
-      .flatMap { v =>
-        val p = scala.util.Try(v.trim.toLong).toOption
-        if (p.isEmpty) System.err.println(
-          s"[graft] ignoring malformed spark.graft.clusters.maxLocalEdges='$v' (want a long)")
-        p
-      }.getOrElse(4L * 1024 * 1024)
-    val nContracted = contracted.count()
-    val (inner, innerRounds) =
-      if (nContracted == 0L) {
-        (contracted.select(col("a").as("id"), col("a").as("label")), 0)
-      } else if (nContracted <= maxLocalEdges) {
-        import spark.implicits._
-        val localLabels = contracted.select(col("a"), col("b")).as[(Long, Long)]
-          .coalesce(1)
-          .mapPartitions { it =>
-            // primitive open-addressing long→long map (ADVICE r15): a boxed
-            // mutable.HashMap[Long,Long] costs ~80-100 B/entry; this is
-            // 17 B/slot at ≤50% load, so the documented ceiling math holds.
-            val parent = new LongLongMap()
-            def find(x: Long): Long = {
-              var r = x
-              while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-              var c = x
-              while (parent.getOrElse(c, c) != r) {
-                val n = parent.getOrElse(c, c); parent.update(c, r); c = n
-              }
-              r
-            }
-            it.foreach { case (a, b) =>
-              val ra = find(a); val rb = find(b)
-              if (ra != rb) {
-                val lo = math.min(ra, rb); val hi = math.max(ra, rb)
-                parent.update(hi, lo)
-                if (!parent.contains(lo)) parent.update(lo, lo)
-              } else if (!parent.contains(ra)) parent.update(ra, ra)
-            }
-            // snapshot the key set BEFORE emitting: find() path-compresses
-            // (value writes) during the emit loop; iterating a mutating map
-            // corrupted the scala HashMap version of this code (observed:
-            // 35 of 47 keys yielded). An Array copy of the keys makes the
-            // emit loop immune regardless of map implementation.
-            val ks = parent.keysSnapshot
-            ks.iterator.map(k => (k, find(k)))
-          }
-          .toDF("id", "label")
-          .materialize()
-        (localLabels, 1)
-      } else {
-        val cEdges = contracted.select(col("a").as("id"), col("b").as("nbr"))
-          .unionAll(contracted.select(col("b").as("id"), col("a").as("nbr")))
-        val cInit = cEdges
-          .select(col("id"), least(col("id"), col("nbr")).as("label"))
-          .groupBy("id").agg(min("label").as("label"))
-          .materialize()
-        propagateLoop(cEdges, cInit, shortcut = true)
+    import spark.implicits._
+    val maxLocalEdges = maxLocalEdgesConf(spark)
+    val nForest = spark.sparkContext.longAccumulator
+    val forest = ab.as[(Long, Long)]
+      .mapPartitions { it =>
+        val uf = new UnionFind
+        it.foreach { case (a, b) => uf.union(a, b) }
+        nForest.add(uf.size)
+        uf.labels
       }
-    // compose: node → initial label → that label's closed component min.
-    // A label absent from the contracted node set already IS its
-    // component's minimum (its whole neighborhood contracted onto it).
-    val labels = init.join(
-        inner.select(col("id").as("label"), col("label").as("l2")),
-        Seq("label"), "left")
-      .select(col("id"), coalesce(col("l2"), col("label")).as("label"))
-    (labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-      .orderBy("doc_id"), innerRounds + 1)
+      .toDF("a", "b")
+      .materialize(ser)
+    if (nForest.value <= maxLocalEdges) {
+      val local = forest.as[(Long, Long)]
+        .coalesce(1)
+        .mapPartitions { it =>
+          val uf = new UnionFind
+          it.foreach { case (a, b) => uf.add(a); uf.add(b); uf.union(a, b) }
+          uf.labels
+        }
+        .toDF("doc_id", "cluster_id")
+        // one partition: sorting within it orders the whole result, with
+        // no range-partitioning sample job or exchange
+        .sortWithinPartitions("doc_id")
+      (local, 1)
+    } else {
+      val (labels, rounds) = propagateLoop(forest, shortcut = true)
+      (ordered(labels), rounds + 1)
+    }
   }
 
-  /** Min-label propagation to fixpoint over a symmetric edge list, with
-    * optional pointer doubling (L(u) ← L(L(u)) — the Shiloach-Vishkin
-    * shortcut; labels only ever decrease, so least() is exact). Returns
-    * (id → label, rounds). Convergence is detected by the EXACT decimal
-    * sum of labels: the node set is fixed and every per-node label is
-    * non-increasing round over round, so the sum is strictly decreasing
-    * until the (unique) fixpoint — one aggregate scan of the small label
-    * table instead of the old join-both-sides isEmpty check. */
-  private def propagateLoop(edges: DataFrame, init: DataFrame,
-                            shortcut: Boolean): (DataFrame, Int) = {
+  /** `spark.graft.clusters.maxLocalEdges`: a non-negative row count, else
+    * fail loudly naming the key. */
+  private def maxLocalEdgesConf(spark: SparkSession): Long = {
+    val key = "spark.graft.clusters.maxLocalEdges"
+    spark.conf.getOption(key).fold(4L * 1024 * 1024) { v =>
+      v.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"$key must be a non-negative integer (0 = always distributed), got '$v'"))
+    }
+  }
+
+  /** Min-label propagation to fixpoint over the symmetrized pairs (a, b),
+    * with optional pointer doubling (L(u) ← L(L(u)) — the Shiloach-Vishkin
+    * shortcut, O(log diameter) rounds; labels only ever decrease, so
+    * least() is exact). Each round is one co-partitioned edge-label join +
+    * partial-min shuffle, and `materialize` truncates the growing lineage
+    * per round. Returns (id → label, rounds). Convergence is detected by
+    * the EXACT decimal sum of labels: the node set is fixed and every
+    * per-node label is non-increasing round over round, so the sum is
+    * strictly decreasing until the (unique) fixpoint — one aggregate scan
+    * of the small label table per round. */
+  private def propagateLoop(pairs: DataFrame, shortcut: Boolean): (DataFrame, Int) = {
+    val edges = pairs.select(col("a").as("id"), col("b").as("nbr"))
+      .unionAll(pairs.select(col("b").as("id"), col("a").as("nbr")))
     def labelSum(df: DataFrame): java.math.BigDecimal = {
       val v = df.agg(sum(col("label").cast("decimal(38,0)"))).head().get(0)
       if (v == null) java.math.BigDecimal.ZERO
       else v.asInstanceOf[java.math.BigDecimal]
     }
-    var labels = init
+    var labels = edges.select(col("id"), least(col("id"), col("nbr")).as("label"))
+      .groupBy("id").agg(min("label").as("label"))
+      .materialize()
     var prevSum = labelSum(labels)
     var rounds = 0
     var converged = labels.isEmpty
@@ -2002,4 +1927,44 @@ object Dedup {
           " "), lit("")).as("clean_text"))
       .orderBy("doc_id")
   }
+}
+
+/** Union-find over long node ids with MIN-ROOT merging, so every root is
+  * its component's minimum: [[Dedup.clustersWithRounds]] runs it per pair
+  * partition and again in its single finishing task. Only non-root nodes
+  * get a parent entry; a root is recorded only by [[add]] or a self pair
+  * (a, a). So [[labels]] after unioning a partition's pairs is that
+  * partition's spanning forest (plus self-pair nodes), and after [[add]]
+  * of every endpoint it labels every node. Path compression in [[find]];
+  * parents live in a primitive [[LongLongMap]]. One instance per task. */
+private[graft] final class UnionFind {
+  private val parent = new LongLongMap()
+
+  /** Recorded nodes, i.e. the number of rows [[labels]] emits. */
+  def size: Int = parent.size
+
+  def find(x: Long): Long = {
+    var r = x
+    while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+    var c = x
+    while (parent.getOrElse(c, c) != r) {
+      val n = parent.getOrElse(c, c); parent.update(c, r); c = n
+    }
+    r
+  }
+
+  def add(x: Long): Unit = if (!parent.contains(x)) parent.update(x, x)
+
+  def union(a: Long, b: Long): Unit =
+    if (a == b) add(a)
+    else {
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent.update(math.max(ra, rb), math.min(ra, rb))
+    }
+
+  /** (node, root) per recorded node. The key set is copied first: find's
+    * path compression writes values while this emits, and iterating a
+    * mutating scala HashMap dropped keys (35 of 47 yielded, r15). */
+  def labels: Iterator[(Long, Long)] =
+    parent.keysSnapshot.iterator.map(k => (k, find(k)))
 }

@@ -185,10 +185,10 @@ object Graph {
     * low-density chains are transitive-closure accidents worth a
     * threshold re-check before deduping through them.
     *
-    * Labels come from [[Dedup.clusters]] — the shared min-label
-    * propagation + pointer-doubling closure (O(log diameter) rounds, one
-    * co-partitioned join + partial-min shuffle per round) — so there is
-    * exactly ONE closure implementation in the engine; this operator adds
+    * Labels come from [[Dedup.clusters]] — the shared two-level
+    * union-find closure (per-partition spanning forests, finished in one
+    * task or by distributed min-label rounds above its ceiling) — so there
+    * is exactly ONE closure implementation in the engine; this operator adds
     * two bounded partial aggs (nodes by label, edges by their `a`-side
     * label — every edge is intra-component by closure, so one endpoint
     * suffices). The component id IS the member-minimum doc_id (the

@@ -1,7 +1,9 @@
 package graft.ext
 
-/** Minimal primitive long→long hash map for the single-task union-find
-  * finisher (ADVICE r15): open addressing, linear probing, power-of-two
+/** Minimal primitive long→long hash map: the parent table of
+  * [[UnionFind]], which the connected-components closure runs per pair
+  * partition and in its single finishing task (ADVICE r15). Open
+  * addressing, linear probing, power-of-two
   * capacity, ≤50% load. Per-slot cost is 8+8+1 = 17 bytes (two primitive
   * arrays + an occupancy flag) versus ~80-100 bytes/entry for a boxed
   * `mutable.HashMap[Long, Long]`, which is what makes the documented

@@ -1495,8 +1495,8 @@ object Similarity {
     * exchange of the corpus keyed by cluster_id (the clustering shuffle —
     * co-locating a cluster's vectors is inherent to cluster-scoped
     * scoring); intra-cluster pair scoring runs join-local per cluster and
-    * only (a, b) id pairs survive the eps filter into the closure, which
-    * is the proven pointer-doubling loop over pair-sized relations. A
+    * only (a, b) id pairs survive the eps filter into the closure
+    * ([[Dedup.clusters]], which collapses them map-side per partition). A
     * pathological mega-cluster (quantizer collapse) is Θ(size²) — the
     * [[geometry]] histogram is the pre-flight read that catches that
     * corpus before this op runs, and `maxClusterSize` is the run-time

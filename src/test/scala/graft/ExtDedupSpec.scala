@@ -154,6 +154,84 @@ class ExtDedupSpec extends AnyFunSuite {
     assert(fastRounds <= 10, s"shortcut took $fastRounds rounds")
   }
 
+  private val maxLocalEdgesKey = "spark.graft.clusters.maxLocalEdges"
+
+  private def labelMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("above the local-edge ceiling the distributed closure gives the local and reference labels") {
+    // two 8-cliques bridged by a chain, pairs interleaved over 3 partitions
+    // so each clique's pairs are split across partitions
+    val cliques = for {
+      base <- Seq(100L, 200L); i <- 0L until 8L; j <- i + 1 until 8L
+    } yield (base + j, base + i)
+    val dense = spark.sparkContext
+      .parallelize((cliques ++ Seq((107L, 150L), (150L, 203L)))
+        .sortBy(p => (p._1 * 31 + p._2) % 17), 3)
+      .toDF("a", "b")
+    assert(dense.rdd.getNumPartitions >= 2)
+    val chain = (10L until 18L).map(i => (i, i + 1)).toDF("a", "b")
+    val minLabel = Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 4L)).toDF("a", "b")
+    for (pairs <- Seq(chain, minLabel, dense)) {
+      val (local, localRounds) = Dedup.clustersWithRounds(pairs)
+      val reference = labelMap(Dedup.clustersWithRounds(pairs, shortcut = false)._1)
+      spark.conf.set(maxLocalEdgesKey, "0")
+      val (distributed, distRounds) =
+        try Dedup.clustersWithRounds(pairs) finally spark.conf.unset(maxLocalEdgesKey)
+      assert(localRounds === 1)
+      assert(distRounds >= 2, "the 0 ceiling must take the distributed path")
+      assert(labelMap(local) === reference)
+      assert(labelMap(distributed) === reference)
+    }
+    val dl = labelMap(Dedup.clusters(dense))
+    assert(dl.size === 17 && dl.values.toSet === Set(100L))
+  }
+
+  test("building clusters runs at most two Spark jobs") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val group = s"clusters-build-${System.nanoTime()}"
+    val marker = s"$group-drain"
+    def groupOf(p: java.util.Properties) =
+      Option(p).map(_.getProperty("spark.jobGroup.id")).orNull
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = groupOf(e.properties) match {
+        case `group` => jobs.incrementAndGet()
+        case `marker` => markerJobs.add(e.jobId)
+        case _ =>
+      }
+      // the bus delivers in order: once the marker job's end arrives,
+      // every event of the build has been seen
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(e.jobId)) drained.countDown()
+    }
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 4L), (3L, 7L)).toDF("a", "b")
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "build Dedup.clusters")
+      val labels = try Dedup.clusters(pairs) finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "drain the listener bus")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get() >= 1 && jobs.get() <= 2, s"${jobs.get()} jobs while building")
+      assert(labelMap(labels) === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L,
+        5L -> 5L, 6L -> 5L, 4L -> 4L, 9L -> 4L))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a malformed or negative maxLocalEdges conf fails loudly, naming the key") {
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
+    for (bad <- Seq("4M", "-1")) {
+      spark.conf.set(maxLocalEdgesKey, bad)
+      val e = try intercept[IllegalArgumentException](Dedup.clusters(pairs))
+        finally spark.conf.unset(maxLocalEdgesKey)
+      assert(e.getMessage.contains(maxLocalEdgesKey) && e.getMessage.contains(bad))
+    }
+  }
+
   test("sourceOverlap: identical sources estimate 1.0, disjoint near 0") {
     val text1 = "alpha beta gamma delta epsilon zeta eta theta"
     val text2 = "one two three four five six seven eight nine"

@@ -36,8 +36,8 @@ class MaterializeSpec extends AnyFunSuite {
         (7L until 57L).toSeq)
       // the reliable path must actually land blocks in the checkpoint dir
       assert(files() > filesBefore, s"reliable materialize wrote nothing to $dir")
-      // end-to-end through every materialize site in the closure path:
-      // same labels as the conf-off default
+      // end-to-end through the closure's one materialize site (its
+      // spanning forest): same labels as the conf-off default
       val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 4L)).toDF("a", "b")
       val reliable = ext.Dedup.clusters(pairs).collect().map(_.toSeq).toSeq
       spark.conf.set("spark.graft.materialize.reliable", "false")
