@@ -109,6 +109,10 @@ object ExtQueries {
   private def docs(s: SparkSession, dir: String)   = Tables.load(s, dir, "documents")
   private def embs(s: SparkSession, dir: String)   = Tables.load(s, dir, "embeddings")
   private def events(s: SparkSession, dir: String) = Tables.load(s, dir, "events")
+  private def sketchStore(s: SparkSession, dir: String) = cachedStore("graft_sketch_store_v1",
+    s"$dir/events.parquet", "_SUCCESS")(graft.ext.SketchStore.buildSketchStore(events(s, dir), _))
+  private def histStore(s: SparkSession, dir: String) = cachedStore("graft_hist_store_v1",
+    s"$dir/events.parquet", "_SUCCESS")(graft.ext.HistStore.buildHistStore(events(s, dir), _))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // E3 — text analysis
@@ -544,58 +548,28 @@ object ExtQueries {
     // report unions 7 tiny rows instead of re-shuffling 7 days of raw
     // events — the checked twin pins the estimate inside a 5% envelope
     // against the exact count the oracle replays
-    "events_distinct_sketch_stored" -> ((s, dir) => {
-      val e = events(s, dir)
-      val store = cachedStore("graft_sketch_store_v1",
-        s"$dir/events.parquet", "_SUCCESS") { tmp =>
-        graft.ext.SketchStore.buildSketchStore(e, tmp)
-      }
-      graft.ext.SketchStore.trailingDistinctChecked(e, store)
-    }),
+    "events_distinct_sketch_stored" -> ((s, dir) =>
+      graft.ext.SketchStore.trailingDistinctChecked(events(s, dir), sketchStore(s, dir))),
     // the same store's AD-HOC range entry point: distinct users over an
     // arbitrary [start, end] day span — 14 sketch rows union to ONE row,
     // raw events untouched; exactness is the checked twin's job
-    "events_distinct_sketch_range" -> ((s, dir) => {
-      val e = events(s, dir)
-      val store = cachedStore("graft_sketch_store_v1",
-        s"$dir/events.parquet", "_SUCCESS") { tmp =>
-        graft.ext.SketchStore.buildSketchStore(e, tmp)
-      }
-      graft.ext.SketchStore.rangeDistinctChecked(e, store, "2024-01-08", "2024-01-21")
-    }),
+    "events_distinct_sketch_range" -> ((s, dir) => graft.ext.SketchStore.rangeDistinctChecked(
+      events(s, dir), sketchStore(s, dir), "2024-01-08", "2024-01-21")),
     // the sketch store's exact-deterministic QUANTILE sibling: per-day
     // fixed-width bin counts (an ADD fold — day splits sum exactly), a
     // trailing-7-day p50/p90/p99 report reads O(days x bins) tiny rows
     // instead of re-shuffling raw events; every column hash-matches the
     // oracle (no envelope — interpolation is exact math over exact counts)
-    "events_quantile_hist_stored" -> ((s, dir) => {
-      val e = events(s, dir)
-      val store = cachedStore("graft_hist_store_v1",
-        s"$dir/events.parquet", "_SUCCESS") { tmp =>
-        graft.ext.HistStore.buildHistStore(e, tmp)
-      }
-      graft.ext.HistStore.trailingQuantiles(s, store)
-    }),
+    "events_quantile_hist_stored" -> ((s, dir) =>
+      graft.ext.HistStore.trailingQuantiles(s, histStore(s, dir))),
     // the same store's AD-HOC range entry point: one row over an
     // arbitrary [start, end] day span, raw events untouched
-    "events_quantile_hist_range" -> ((s, dir) => {
-      val e = events(s, dir)
-      val store = cachedStore("graft_hist_store_v1",
-        s"$dir/events.parquet", "_SUCCESS") { tmp =>
-        graft.ext.HistStore.buildHistStore(e, tmp)
-      }
-      graft.ext.HistStore.rangeQuantiles(s, store, "2024-01-08", "2024-01-21")
-    }),
+    "events_quantile_hist_range" -> ((s, dir) =>
+      graft.ext.HistStore.rangeQuantiles(s, histStore(s, dir), "2024-01-08", "2024-01-21")),
     // the monitor verdict on the stored report: day-over-day p50 shift +
     // >5% drift flag — what a distribution monitor pages on
-    "events_quantile_drift" -> ((s, dir) => {
-      val e = events(s, dir)
-      val store = cachedStore("graft_hist_store_v1",
-        s"$dir/events.parquet", "_SUCCESS") { tmp =>
-        graft.ext.HistStore.buildHistStore(e, tmp)
-      }
-      graft.ext.HistStore.quantileDrift(s, store)
-    }),
+    "events_quantile_drift" -> ((s, dir) =>
+      graft.ext.HistStore.quantileDrift(s, histStore(s, dir))),
     "events_anomaly"         -> ((s, dir) => Events.anomalyHourly(events(s, dir))),
     "events_top_users"       -> ((s, dir) => Events.topUsers(events(s, dir))),
     // A/B readout: deterministic md5 hash cohorts, conversion lift + z

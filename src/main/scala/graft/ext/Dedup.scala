@@ -611,12 +611,22 @@ object Dedup {
                        numFiles: Int = 8): Unit =
     graft.ops.StoreLifecycle.publish(storeDir) { tmp =>
       graft.ops.Scale.clusteredParquet(
-        spark.read.parquet(s"$storeDir/bands"), s"$tmp/bands",
+        readBandStore(spark, storeDir, "bands"), s"$tmp/bands",
         Seq("band", "bsig"), numFiles)
       graft.ops.Scale.clusteredParquet(
-        spark.read.parquet(s"$storeDir/hashes"), s"$tmp/hashes",
+        readBandStore(spark, storeDir, "hashes"), s"$tmp/hashes",
         Seq("hist_id"), numFiles)
     }
+
+  /** The band store's relations as [[writeBandStore]] lays them out. Every
+    * reader declares them, so planning a probe runs no inference job. */
+  private[graft] val bandStoreSchema = Map(
+    "bands" -> "hist_id BIGINT, band INT, bsig STRING",
+    "hashes" -> "hist_id BIGINT, sh ARRAY<BIGINT>")
+
+  private[graft] def readBandStore(spark: SparkSession, storeDir: String,
+                                   relation: String): DataFrame =
+    spark.read.schema(bandStoreSchema(relation)).parquet(s"$storeDir/$relation")
 
   private def writeBandStore(docs: DataFrame, storeDir: String,
                              mode: String, numFiles: Int): Unit = {
@@ -626,12 +636,12 @@ object Dedup {
       // shingle-less docs never enter the store (minhashLsh's note)
       .filter(expr("size(h60) > 0"))
       .withColumn("sig", expr("minhash_sig(h60)"))
+    val histId = col("doc_id").cast("bigint").as("hist_id")
     graft.ops.Scale.clusteredParquet(
-      sig.select(col("doc_id").as("hist_id"),
-        posexplode(expr(bandSigsExpr)).as(Seq("band", "bsig"))),
+      sig.select(histId, posexplode(expr(bandSigsExpr)).as(Seq("band", "bsig"))),
       s"$storeDir/bands", Seq("band", "bsig"), numFiles, mode)
     graft.ops.Scale.clusteredParquet(
-      sig.select(col("doc_id").as("hist_id"), col("h60").as("sh")),
+      sig.select(histId, col("h60").as("sh")),
       s"$storeDir/hashes", Seq("hist_id"), numFiles, mode)
   }
 
@@ -648,8 +658,8 @@ object Dedup {
                         threshold: Double = 0.8): DataFrame = {
     val spark = incoming.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    val histBands = spark.read.parquet(s"$storeDir/bands")
-    val histHashes = spark.read.parquet(s"$storeDir/hashes")
+    val histBands = readBandStore(spark, storeDir, "bands")
+    val histHashes = readBandStore(spark, storeDir, "hashes")
     val incSig = spread(incoming)
       .select(col("doc_id"), expr("shingle_hash60(text, 3)").as("h60"))
       // shingle-less docs never probe (minhashLsh's note)
@@ -761,10 +771,10 @@ object Dedup {
     requireTriageStoreComplete(storeDir)
     graft.ops.StoreLifecycle.publish(storeDir) { tmp =>
       graft.ops.Scale.clusteredParquet(
-        spark.read.parquet(s"$storeDir/bands").distinct(), s"$tmp/bands",
+        readBandStore(spark, storeDir, "bands").distinct(), s"$tmp/bands",
         Seq("band", "bsig"), numFiles)
       graft.ops.Scale.clusteredParquet(
-        spark.read.parquet(s"$storeDir/hashes").distinct(), s"$tmp/hashes",
+        readBandStore(spark, storeDir, "hashes").distinct(), s"$tmp/hashes",
         Seq("hist_id"), numFiles)
       graft.ops.Scale.clusteredParquet(
         spark.read.parquet(s"$storeDir/keys").distinct(), s"$tmp/keys",

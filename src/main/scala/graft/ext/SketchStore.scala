@@ -36,8 +36,6 @@ import org.apache.spark.sql.functions._
   * [[Events.approxDistinctChecked]] correctness pattern. */
 object SketchStore {
 
-  private def path(s: String) = java.nio.file.Paths.get(s)
-
   /** (day, sk) — one HLL sketch row per calendar day of `events`. */
   private def daySketches(events: DataFrame, lgK: Int): DataFrame =
     events
@@ -48,12 +46,7 @@ object SketchStore {
   /** Build + atomically publish the daily sketch relation. */
   def buildSketchStore(events: DataFrame, storeDir: String, lgK: Int = 12): Unit = {
     require(lgK >= 4 && lgK <= 21, s"lgK $lgK outside DataSketches' [4, 21]")
-    graft.ops.StoreLifecycle.publish(storeDir) { tmp =>
-      daySketches(events, lgK).write.mode("overwrite").parquet(s"$tmp/days")
-      java.nio.file.Files.write(path(tmp).resolve("meta.txt"),
-        s"lgK=$lgK\n".getBytes("UTF-8"))
-      java.nio.file.Files.write(path(tmp).resolve("_SUCCESS"), Array.empty[Byte])
-    }
+    HistStore.publishDays(storeDir, s"lgK=$lgK")(daySketches(events, lgK))
   }
 
   /** Fold a day's (or backfill's) events in at O(increment): sketch the
@@ -70,42 +63,38 @@ object SketchStore {
     * snapshot — probes racing the swap keep their planned version). */
   def compactSketchStore(spark: SparkSession, storeDir: String): Unit = {
     val lgK = readLgK(spark, storeDir)
-    graft.ops.StoreLifecycle.publish(storeDir) { tmp =>
-      spark.read.parquet(s"$storeDir/days")
-        .groupBy("day")
-        .agg(hll_union_agg(col("sk"), lit(false)).as("sk"))
-        .write.mode("overwrite").parquet(s"$tmp/days")
-      java.nio.file.Files.write(path(tmp).resolve("meta.txt"),
-        s"lgK=$lgK\n".getBytes("UTF-8"))
-      java.nio.file.Files.write(path(tmp).resolve("_SUCCESS"), Array.empty[Byte])
-    }
+    HistStore.publishDays(storeDir, s"lgK=$lgK")(readDays(spark, storeDir)
+      .groupBy("day").agg(hll_union_agg(col("sk"), lit(false)).as("sk")))
   }
 
   private def readLgK(spark: SparkSession, storeDir: String): Int =
     graft.ops.StoreLifecycle.readMeta(storeDir)("lgK").toInt
 
+  /** `days/` as [[daySketches]] writes it; reads declare it, so building a
+    * probe runs no schema-inference job. */
+  private[graft] val daysSchema = "day DATE, sk BINARY"
+
+  private def readDays(spark: SparkSession, storeDir: String): DataFrame =
+    spark.read.schema(daysSchema).parquet(s"$storeDir/days")
+
   /** Trailing-`windowDays` distinct-user estimates, one row per stored
-    * day: the window's sketch rows union (a ≤ days × windowDays
-    * broadcast range join over the TINY store relation — raw events are
-    * never read). Returns (day, n_days, approx_users). */
+    * day: the window's sketch rows union in one single-task job over the
+    * TINY store relation ([[HistStore.trailingWindows]]) — raw events are
+    * never read. Returns (day, n_days, approx_users). */
   def trailingDistinct(spark: SparkSession, storeDir: String,
                        windowDays: Int = 7): DataFrame = {
-    require(windowDays >= 1)
     readLgK(spark, storeDir) // _SUCCESS + meta guard
-    val sk = spark.read.parquet(s"$storeDir/days")
-    val anchors = sk.select(col("day").as("anchor")).distinct()
-    sk.join(broadcast(anchors),
-        col("day").between(date_sub(col("anchor"), windowDays - 1), col("anchor")))
+    HistStore.trailingWindows(readDays(spark, storeDir), windowDays)
       .groupBy(col("anchor").as("day"))
-      .agg(countDistinct(col("day")).as("n_days"),
+      .agg(max("n_days").as("n_days"),
         hll_sketch_estimate(hll_union_agg(col("sk"), lit(false))).as("approx_users"))
   }
 
   /** Distinct-user estimate over an ARBITRARY `[startDay, endDay]` range —
     * the store's pitch made an entry point: the range's sketch rows union
     * to ONE row (n_days, approx_users). Same union shape as
-    * [[trailingDistinct]] without the per-anchor fan-out; the day filter
-    * reads only the range's O(days) sketch rows, raw events never. */
+    * [[trailingDistinct]] without the per-anchor fan-out, in one task; the
+    * day filter reads only the range's O(days) sketch rows, raw events never. */
   def rangeDistinct(spark: SparkSession, storeDir: String,
                     startDay: String, endDay: String): DataFrame = {
     readLgK(spark, storeDir) // _SUCCESS + meta guard
@@ -115,8 +104,9 @@ object SketchStore {
     val s = java.time.LocalDate.parse(startDay)
     require(!s.isAfter(java.time.LocalDate.parse(endDay)),
       s"rangeDistinct: startDay $startDay is after endDay $endDay")
-    spark.read.parquet(s"$storeDir/days")
+    readDays(spark, storeDir)
       .filter(col("day").between(lit(startDay).cast("date"), lit(endDay).cast("date")))
+      .coalesce(1)
       .agg(countDistinct(col("day")).as("n_days"),
         hll_sketch_estimate(hll_union_agg(col("sk"), lit(false))).as("approx_users"))
       // a range covering NO stored days would emit (0, NULL) — a union

@@ -116,8 +116,8 @@ object DocStreams {
                         watermark: String = "1 hour"): DataFrame = {
     val spark = docs.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    val histBands = spark.read.parquet(s"$storeDir/bands")
-    val histHashes = spark.read.parquet(s"$storeDir/hashes")
+    val histBands = graft.ext.Dedup.readBandStore(spark, storeDir, "bands")
+    val histHashes = graft.ext.Dedup.readBandStore(spark, storeDir, "hashes")
     val streamBands = docs
       .withWatermark("ingest_ts", watermark)
       .select(col("doc_id").as("inc_id"), col("ingest_ts"),
@@ -156,8 +156,8 @@ object DocStreams {
                                watermark: String = "1 hour"): DataFrame = {
     val spark = docs.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    val evalBands = spark.read.parquet(s"$evalBandStoreDir/bands")
-    val evalHashes = spark.read.parquet(s"$evalBandStoreDir/hashes")
+    val evalBands = graft.ext.Dedup.readBandStore(spark, evalBandStoreDir, "bands")
+    val evalHashes = graft.ext.Dedup.readBandStore(spark, evalBandStoreDir, "hashes")
     val banded = docs.withWatermark("ingest_ts", watermark)
       .select(col("doc_id").as("train_id"), col("ingest_ts"),
         expr("shingle_hash60(text, 3)").as("si"))
@@ -443,8 +443,8 @@ object DocStreams {
     // per-doc work would multiply by the duplication factor
     val storeKeys = spark.read.parquet(s"$storeDir/keys").distinct()
       .withColumn("seen", lit(true))
-    val histBands = spark.read.parquet(s"$storeDir/bands")
-    val histHashes = spark.read.parquet(s"$storeDir/hashes")
+    val histBands = graft.ext.Dedup.readBandStore(spark, storeDir, "bands")
+    val histHashes = graft.ext.Dedup.readBandStore(spark, storeDir, "hashes")
     val base = graft.ext.BloomDedup.probeStored(docs, s"$storeDir/bloom")
       .withWatermark("ingest_ts", watermark)
       .withColumn("k", graft.ext.BloomDedup.contentKey(col("text")))

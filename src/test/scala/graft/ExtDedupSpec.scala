@@ -188,38 +188,11 @@ class ExtDedupSpec extends AnyFunSuite {
   }
 
   test("building clusters runs at most two Spark jobs") {
-    import org.apache.spark.scheduler._
-    val sc = spark.sparkContext
-    val group = s"clusters-build-${System.nanoTime()}"
-    val marker = s"$group-drain"
-    def groupOf(p: java.util.Properties) =
-      Option(p).map(_.getProperty("spark.jobGroup.id")).orNull
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = groupOf(e.properties) match {
-        case `group` => jobs.incrementAndGet()
-        case `marker` => markerJobs.add(e.jobId)
-        case _ =>
-      }
-      // the bus delivers in order: once the marker job's end arrives,
-      // every event of the build has been seen
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (markerJobs.contains(e.jobId)) drained.countDown()
-    }
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 4L), (3L, 7L)).toDF("a", "b")
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "build Dedup.clusters")
-      val labels = try Dedup.clusters(pairs) finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "drain the listener bus")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(jobs.get() >= 1 && jobs.get() <= 2, s"${jobs.get()} jobs while building")
-      assert(labelMap(labels) === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L,
-        5L -> 5L, 6L -> 5L, 4L -> 4L, 9L -> 4L))
-    } finally sc.removeSparkListener(listener)
+    val (labels, jobs) = SparkTestSession.jobsIn(Dedup.clusters(pairs))
+    assert(jobs >= 1 && jobs <= 2, s"$jobs jobs while building")
+    assert(labelMap(labels) === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L,
+      5L -> 5L, 6L -> 5L, 4L -> 4L, 9L -> 4L))
   }
 
   test("a malformed or negative maxLocalEdges conf fails loudly, naming the key") {

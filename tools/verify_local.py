@@ -1,13 +1,16 @@
 #!/usr/bin/env python3
 """Local mimic of the driver's correctness gate.
 
-Usage: python3 tools/verify_local.py [sfdir] [outdir]
+Usage: python3 tools/verify_local.py [sfdir] [outdir] [filter]
 
-Assumes `sbt "runMain graft.Verify <sfdir> <outdir>"` has already produced
-<outdir>/<query>/ parquet dirs + <outdir>/oracle_sql.json. Runs each oracle
-SQL in DuckDB over the raw test tables and compares: row count, column-name
-set, and values (columns sorted by name, exact compare with a tiny float
-tolerance fallback so we can see *how* far off a float is).
+Assumes `sbt "runMain graft.Verify <sfdir> <outdir> [filter]"` has already
+produced <outdir>/<query>/ parquet dirs + <outdir>/oracle_sql.json. The
+optional filter takes the same comma-separated name substrings as Verify's
+and compares only the queries whose name contains one of them; without it,
+every query is compared. Runs each oracle SQL in DuckDB over the raw test
+tables and compares: row count, column-name set, and values (columns sorted
+by name, exact compare with a tiny float tolerance fallback so we can see
+*how* far off a float is).
 """
 import sys, json, glob, os
 import duckdb
@@ -15,15 +18,23 @@ import pandas as pd
 
 sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+# split like Java's String.split(','), which drops trailing empty strings
+pats = sys.argv[3].rstrip(",").split(",") if len(sys.argv) > 3 else None
+
+
+def selected(name):
+    return pats is None or any(p in name for p in pats)
+
 
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]:
     con.sql(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
 
-oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+oracle = {k: v for k, v in json.load(open(f"{outdir}/oracle_sql.json")).items()
+          if selected(k)}
 names = sorted(d for d in os.listdir(outdir)
-               if os.path.isdir(os.path.join(outdir, d)))
+               if os.path.isdir(os.path.join(outdir, d)) and selected(d))
 
 ok = fail = skipped = 0
 for name in names:
