@@ -109,7 +109,7 @@ object ExtQueries {
   private def docs(s: SparkSession, dir: String)   = Tables.load(s, dir, "documents")
   private def embs(s: SparkSession, dir: String)   = Tables.load(s, dir, "embeddings")
   private def events(s: SparkSession, dir: String) = Tables.load(s, dir, "events")
-  private def sketchStore(s: SparkSession, dir: String) = cachedStore("graft_sketch_store_v1",
+  private[graft] def sketchStore(s: SparkSession, dir: String) = cachedStore("graft_sketch_store_v1",
     s"$dir/events.parquet", "_SUCCESS")(graft.ext.SketchStore.buildSketchStore(events(s, dir), _))
   private def histStore(s: SparkSession, dir: String) = cachedStore("graft_hist_store_v1",
     s"$dir/events.parquet", "_SUCCESS")(graft.ext.HistStore.buildHistStore(events(s, dir), _))

@@ -1,8 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Mergeable HISTOGRAM store — exact-deterministic value-distribution
   * reporting over ARBITRARY day ranges without ever rescanning raw
@@ -48,13 +48,22 @@ import org.apache.spark.sql.functions._
   *   meta.txt      binWidth — probes MUST bin at the builder's width
   *   _SUCCESS
   *
-  * Quantile math (mirrored verbatim by the oracle SQL): within a window,
-  * cum = running sum of cnt in bin order, n = window total; for target
-  * rank t = q·n the CROSSING bin is the unique row with
+  * Quantile math (the kernel follows the oracle's operation order):
+  * within a window, cum = running sum of cnt in bin order, n = window
+  * total; for target rank t = q·n the CROSSING bin is the unique row with
   * cum − cnt < t ≤ cum (cnt ≥ 1 keeps cum strictly increasing), and the
   * estimate is bin·w + ((t − (cum − cnt)) / cnt)·w — exact linear
   * interpolation, one IEEE division, identical operation order on both
-  * engines. */
+  * engines.
+  *
+  * Each report is one kernel: `coalesce(1)` and one `mapPartitions` that
+  * folds the store rows into day → (bin → cnt) and walks the stored days
+  * in order, so a report compiles a scan and one map instead of a chain of
+  * window, aggregate and sort operators. Memory bound: the task holds the
+  * folded histogram, at most days × bins (bin, cnt) pairs kept per day in
+  * primitive arrays at 16 B a pair — 10 years × 1,000 bins is about 58 MB;
+  * while folding, each store row takes 16 B (up to twice that in growth
+  * headroom) until its day is summed. */
 object HistStore {
 
   private def path(s: String) = java.nio.file.Paths.get(s)
@@ -159,62 +168,137 @@ object HistStore {
       }
     }
 
-  /** The crossing-bin interpolated estimate for quantile `q`, as a column
-    * over the (bin, cnt, cum, n) relation. Exactly one row per group
-    * satisfies the crossing predicate, so the max() picks it. */
-  private def estCol(q: Double, w: Double): Column = {
-    val target = lit(q) * col("n")
-    round(max(when(col("cum") - col("cnt") < target && target <= col("cum"),
-      (col("bin") * lit(w)) +
-        ((target - (col("cum") - col("cnt"))) / col("cnt")) * lit(w))), 6)
-      .as(f"est_p${(q * 100).round}%d")
+  /** A histogram folded in memory: its bins ascending with each bin's
+    * summed count, and the count of the null bin (rows whose value was
+    * null), which sorts before every bin as Spark's ascending order puts
+    * nulls first. Primitive arrays, 16 B per (bin, cnt) pair. */
+  private final class Hist(val nullCnt: Long, val bins: Array[Long], val cnts: Array[Long]) {
+    def n: Long = cnts.foldLeft(nullCnt)(_ + _)
   }
 
-  /** Each row of `rows` (`day` plus payload) once per trailing
-    * `windowDays` window that holds it, keyed by the window's last day
-    * `anchor`, with `n_days` (bigint) the stored days in that window; only
-    * stored-day anchors are kept. Shared by the trailing reports here and
-    * in [[SketchStore]]. One partition is the right plan: a store relation
-    * has at most days × bins rows (sketch store: days × append splits), so
-    * 10 years × 1,000 bins × 7 anchors is 25M narrow rows in one task, and
-    * one partition satisfies every clustering and ordering above it — the
-    * report plans no exchange and runs as ONE Spark job. */
-  private[ext] def trailingWindows(rows: DataFrame, windowDays: Int): DataFrame = {
-    require(windowDays >= 1, s"windowDays $windowDays must be positive")
-    rows.coalesce(1)
-      .withColumn("anchor", explode(sequence(col("day"), date_add(col("day"), windowDays - 1))))
-      .withColumn("days", collect_set(col("day")).over(Window.partitionBy("anchor")))
-      .filter(array_contains(col("days"), col("anchor")))
-      .withColumn("n_days", size(col("days")).cast("bigint"))
-      .drop("days")
+  /** Collects (bin, cnt) rows in any order, split rows included, and sums
+    * them per bin into a [[Hist]]. */
+  private final class HistBuilder {
+    private var bins = new Array[Long](8)
+    private var cnts = new Array[Long](8)
+    private var rows = 0
+    private var nullCnt = 0L
+
+    def addNull(cnt: Long): Unit = nullCnt += cnt
+
+    def add(bin: Long, cnt: Long): Unit = {
+      if (rows == bins.length) {
+        bins = java.util.Arrays.copyOf(bins, 2 * rows)
+        cnts = java.util.Arrays.copyOf(cnts, 2 * rows)
+      }
+      bins(rows) = bin; cnts(rows) = cnt; rows += 1
+    }
+
+    def add(h: Hist): Unit = {
+      addNull(h.nullCnt)
+      for (i <- h.bins.indices) add(h.bins(i), h.cnts(i))
+    }
+
+    def result(): Hist = {
+      val keys = java.util.Arrays.copyOf(bins, rows)
+      java.util.Arrays.sort(keys)
+      var k = 0
+      for (b <- keys) if (k == 0 || keys(k - 1) != b) { keys(k) = b; k += 1 }
+      val sums = new Array[Long](k)
+      for (i <- 0 until rows) sums(java.util.Arrays.binarySearch(keys, 0, k, bins(i))) += cnts(i)
+      new Hist(nullCnt, java.util.Arrays.copyOf(keys, k), sums)
+    }
   }
+
+  /** (epoch day, bin, cnt) in one partition: the rows every histogram
+    * kernel folds. Days travel as epoch-day ints (`unix_date` in,
+    * `date_from_unix_date` out), so no kernel depends on whether a `Row`
+    * gives dates as `java.sql.Date` or `java.time.LocalDate`
+    * (`spark.sql.datetime.java8API.enabled`). */
+  private def kernelInput(hist: DataFrame): DataFrame =
+    hist.select(unix_date(col("day")), col("bin"), col("cnt")).coalesce(1)
+
+  /** One histogram per stored day, ascending by day; a day's split rows
+    * sum per bin. Rows without a day belong to no day and are dropped. */
+  private def foldDays(rows: Iterator[Row]): Array[(Int, Hist)] = {
+    val days = scala.collection.mutable.HashMap.empty[Int, HistBuilder]
+    for (r <- rows if !r.isNullAt(0)) {
+      val b = days.getOrElseUpdate(r.getInt(0), new HistBuilder)
+      if (r.isNullAt(1)) b.addNull(r.getLong(2)) else b.add(r.getLong(1), r.getLong(2))
+    }
+    days.iterator.map { case (d, b) => d -> b.result() }.toArray.sortBy(_._1)
+  }
+
+  /** For each stored day, ascending: the day, the number of stored days in
+    * its trailing window `[day − windowDays + 1, day]`, and the merged
+    * histogram of those days. */
+  private def trailingHists(days: Array[(Int, Hist)], windowDays: Int): Iterator[(Int, Int, Hist)] =
+    days.indices.iterator.map { i =>
+      val anchor = days(i)._1
+      var j = i
+      while (j > 0 && days(j - 1)._1 > anchor - windowDays) j -= 1
+      val merged = new HistBuilder
+      for (k <- j to i) merged.add(days(k)._2)
+      (anchor, i - j + 1, merged.result())
+    }
+
+  /** Spark's `round(x, 6)` on a double, HALF_UP on the decimal form. */
+  private def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** The crossing-bin interpolated estimate for quantile `q`, in the
+    * oracle's operation order: t = q·n as a double, before = cum − cnt as
+    * a long, the crossing bin is the one with before < t ≤ cum, and the
+    * estimate is bin·w + ((t − before) / cnt)·w, rounded to 6 decimals.
+    * The null bin counts toward cum but has no estimate; the max over
+    * crossing bins mirrors the oracle, though cnt ≥ 1 makes it unique.
+    * Null (boxed) when no bin crosses. */
+  private def estimate(h: Hist, q: Double, w: Double): java.lang.Double = {
+    val t = q * h.n
+    var cum = h.nullCnt
+    var est: java.lang.Double = null
+    for (i <- h.bins.indices) {
+      val before = cum
+      cum += h.cnts(i)
+      if (before < t && t <= cum) {
+        val e = h.bins(i) * w + ((t - before) / h.cnts(i)) * w
+        if (est == null || e > est) est = e
+      }
+    }
+    if (est == null) null else round6(est)
+  }
+
+  private def estName(q: Double) = f"est_p${(q * 100).round}%d"
+
+  private def checkQuantiles(qs: Seq[Double]): Unit =
+    require(qs.nonEmpty && qs.forall(q => q > 0 && q <= 1), s"bad quantiles $qs")
 
   /** Trailing-`windowDays` quantile report, one row per stored day:
-    * (day, n_days, n, est_p50, est_p90, est_p99). The window's bin rows
-    * SUM, then a bins-bounded window pass computes the running sum the
-    * crossing-bin rule needs — one single-task job over the TINY store
-    * relation ([[trailingWindows]]), raw events never read. Every column
-    * is exact-deterministic — the oracle replays the math verbatim. */
+    * (day, n_days, n, est_p50, est_p90, est_p99). The store relation is
+    * read in one task and folded there ([[trailingReport]]), raw events
+    * never read. Every column is exact-deterministic — the kernel follows
+    * the oracle's operation order. */
   def trailingQuantiles(spark: SparkSession, storeDir: String,
                         windowDays: Int = 7,
-                        qs: Seq[Double] = Seq(0.5, 0.9, 0.99)): DataFrame = {
-    require(qs.nonEmpty && qs.forall(q => q > 0 && q <= 1), s"bad quantiles $qs")
-    val w = readBinWidth(storeDir)
-    trailingReport(trailingWindows(readDays(spark, storeDir), windowDays), w, qs)
-  }
+                        qs: Seq[Double] = Seq(0.5, 0.9, 0.99)): DataFrame =
+    trailingReport(readDays(spark, storeDir), readBinWidth(storeDir), windowDays, qs)
 
-  /** The report over (anchor, bin, cnt, n_days) window rows. */
-  private def trailingReport(win: DataFrame, w: Double, qs: Seq[Double]): DataFrame = {
-    val cum = Window.partitionBy("anchor").orderBy("bin")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    win.groupBy("anchor", "bin").agg(sum("cnt").as("cnt"), max("n_days").as("n_days"))
-      .withColumn("cum", sum("cnt").over(cum))
-      .withColumn("n", sum("cnt").over(Window.partitionBy("anchor")))
-      .groupBy("anchor")
-      .agg(max("n_days").as("n_days"), max("n").as("n") +: qs.map(estCol(_, w)): _*)
-      .select(Seq(col("anchor").as("day"), col("n_days"), col("n")) ++
-        qs.map(q => col(f"est_p${(q * 100).round}%d")): _*)
-      .orderBy("day")
+  /** The trailing report over a (day, bin, cnt) relation, as one kernel
+    * (see the object doc for its memory bound): the rows fold into
+    * day → (bin → cnt), then the stored days are walked in order. */
+  private[graft] def trailingReport(hist: DataFrame, w: Double, windowDays: Int,
+                                    qs: Seq[Double]): DataFrame = {
+    require(windowDays >= 1, s"windowDays $windowDays must be positive")
+    checkQuantiles(qs)
+    val qa = qs.toArray
+    val out = StructType.fromDDL("day INT, n_days BIGINT, n BIGINT" +
+      qs.map(q => s", ${estName(q)} DOUBLE").mkString)
+    kernelInput(hist).mapPartitions { rows =>
+      trailingHists(foldDays(rows), windowDays).map { case (day, nDays, h) =>
+        Row.fromSeq(Seq[Any](day, nDays.toLong, h.n) ++ qa.map(estimate(h, _, w)))
+      }
+    }(Encoders.row(out)).withColumn("day", date_from_unix_date(col("day")))
   }
 
   /** Quantiles over an ARBITRARY `[startDay, endDay]` range — the store's
@@ -224,60 +308,83 @@ object HistStore {
   def rangeQuantiles(spark: SparkSession, storeDir: String,
                      startDay: String, endDay: String,
                      qs: Seq[Double] = Seq(0.5, 0.9, 0.99)): DataFrame = {
-    require(qs.nonEmpty && qs.forall(q => q > 0 && q <= 1), s"bad quantiles $qs")
     val w = readBinWidth(storeDir)
     // malformed dates and an inverted range are CALLER errors — refuse at
     // construction instead of silently matching zero rows
     val s = java.time.LocalDate.parse(startDay)
     require(!s.isAfter(java.time.LocalDate.parse(endDay)),
       s"rangeQuantiles: startDay $startDay is after endDay $endDay")
-    // a GENUINE global prefix sum over the range's O(days × bins) store
-    // rows, never raw events: one partition, as in [[trailingWindows]], so
-    // the unpartitioned windows and global aggregate need no exchange
-    val cum = Window.orderBy("bin")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    readDays(spark, storeDir)
-      .filter(col("day").between(lit(startDay).cast("date"), lit(endDay).cast("date")))
-      .coalesce(1)
-      .withColumn("n_days", size(collect_set(col("day")).over()).cast("bigint"))
-      .groupBy("bin").agg(sum("cnt").as("cnt"), max("n_days").as("n_days"))
-      .withColumn("cum", sum("cnt").over(cum))
-      .withColumn("n", sum("cnt").over())
-      // a range covering no stored days still answers one row, n_days 0
-      .agg(coalesce(max("n_days"), lit(0L)).as("n_days"),
-        max("n").as("n") +: qs.map(estCol(_, w)): _*)
+    rangeReport(readDays(spark, storeDir)
+      .filter(col("day").between(lit(startDay).cast("date"), lit(endDay).cast("date"))), w, qs)
+  }
+
+  /** The range report over a (day, bin, cnt) relation already cut to the
+    * range: every row folds into one histogram in one task. A range with
+    * no stored days still answers one row: n_days 0, the rest null. The
+    * row comes from the one task `coalesce(1)` runs over a relation read at
+    * execution, as a store read is; a relation the planner already knows
+    * to be empty plans no task and answers no row. */
+  private[graft] def rangeReport(hist: DataFrame, w: Double, qs: Seq[Double]): DataFrame = {
+    checkQuantiles(qs)
+    val qa = qs.toArray
+    val out = StructType.fromDDL("n_days BIGINT, n BIGINT" +
+      qs.map(q => s", ${estName(q)} DOUBLE").mkString)
+    kernelInput(hist).mapPartitions { rows =>
+      val days = foldDays(rows)
+      val all = new HistBuilder
+      days.foreach { case (_, h) => all.add(h) }
+      val h = all.result()
+      Iterator.single(
+        if (days.isEmpty) Row.fromSeq(0L +: Seq.fill(1 + qa.length)(null))
+        else Row.fromSeq(Seq[Any](days.length.toLong, h.n) ++ qa.map(estimate(h, _, w))))
+    }(Encoders.row(out))
   }
 
   /** Day-over-day distribution-drift monitor on the stored report: each
     * day's trailing-window p50 against the previous day's, with the
     * relative shift and a >5% drift flag — the alerting verdict a
     * value-distribution monitor pages on (ingestion mix change, unit
-    * regression upstream). Pure composition over [[trailingQuantiles]],
-    * so it reads the same O(days × bins) store rows and every column is
-    * exact-deterministic; the lag window runs in the report's one
-    * partition over the days-bounded report relation, never the raw log. */
+    * regression upstream). The same kernel as [[trailingQuantiles]] pairs
+    * each report row with the one before it, so it reads the same
+    * O(days × bins) store rows and every column is exact-deterministic. */
   def quantileDrift(spark: SparkSession, storeDir: String,
                     windowDays: Int = 7,
-                    driftPct: Double = 0.05): DataFrame = {
-    val rep = trailingQuantiles(spark, storeDir, windowDays)
-    // day-over-day lag needs a total order over the REPORT relation — one
-    // row per stored day, O(days), already in one partition
-    val w = Window.orderBy("day")
-    rep.withColumn("prev_p50", lag(col("est_p50"), 1).over(w))
-      .filter(col("prev_p50").isNotNull)
-      .withColumn("shift",
-        round(abs(col("est_p50") - col("prev_p50")) / col("prev_p50"), 6))
-      .withColumn("drifted", (col("shift") > lit(driftPct)).cast("int"))
-      .select("day", "est_p50", "prev_p50", "shift", "drifted")
-      .orderBy("day")
+                    driftPct: Double = 0.05): DataFrame =
+    driftReport(readDays(spark, storeDir), readBinWidth(storeDir), windowDays, driftPct)
+
+  /** The drift report over a (day, bin, cnt) relation: (day, est_p50,
+    * prev_p50, shift, drifted) for each stored day after the first whose
+    * previous report row has a p50. shift = round6(|p50 − prev| / prev),
+    * and the flag compares the rounded shift. A zero prev divides by zero
+    * as Spark's division does: an error under ANSI mode, else null. */
+  private[graft] def driftReport(hist: DataFrame, w: Double, windowDays: Int,
+                                 driftPct: Double): DataFrame = {
+    require(windowDays >= 1, s"windowDays $windowDays must be positive")
+    val ansi = hist.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
+    val out = StructType.fromDDL(
+      "day INT, est_p50 DOUBLE, prev_p50 DOUBLE, shift DOUBLE, drifted INT")
+    kernelInput(hist).mapPartitions { rows =>
+      val p50 = trailingHists(foldDays(rows), windowDays)
+        .map { case (day, _, h) => (day, estimate(h, 0.5, w)) }.toSeq
+      p50.zip(p50.drop(1)).collect { case ((_, prev), (day, cur)) if prev != null =>
+        val shift: java.lang.Double =
+          if (cur == null) null
+          else if (prev.doubleValue == 0.0) {
+            if (ansi) throw new ArithmeticException(
+              s"[DIVIDE_BY_ZERO] quantileDrift: the p50 before ${java.time.LocalDate.ofEpochDay(day)} is 0")
+            null
+          } else round6(math.abs(cur - prev) / prev)
+        val drifted = if (shift == null) null else Int.box(if (shift.doubleValue > driftPct) 1 else 0)
+        Row(day, cur, prev, shift, drifted)
+      }.iterator
+    }(Encoders.row(out)).withColumn("day", date_from_unix_date(col("day")))
   }
 
   /** The IN-LINE twin: the same trailing report computed directly from
     * raw events (what a store-less pipeline pays per report) — the bench's
-    * scale contrast; the binning stays parallel, only its result is one task. */
+    * scale contrast; the binning stays parallel, only the kernel is one task. */
   def trailingQuantilesInline(events: DataFrame, windowDays: Int = 7,
                               binWidth: Double = 5.0,
                               qs: Seq[Double] = Seq(0.5, 0.9, 0.99)): DataFrame =
-    trailingReport(trailingWindows(dayHistogram(events, binWidth), windowDays),
-      binWidth, qs)
+    trailingReport(dayHistogram(events, binWidth), binWidth, windowDays, qs)
 }

@@ -912,13 +912,29 @@ class PlanSpec extends AnyFunSuite {
       s"levenshtein pushed into a scan-side stage:\n${levLines.mkString("\n")}")
   }
 
-  test("hist-store probes read ONLY the store relation — raw events never appear") {
-    for (q <- Seq("events_quantile_hist_stored", "events_quantile_hist_range",
-                  "events_quantile_drift")) {
-      val p = plan(q)
+  test("store report probes read ONLY the store relation, as one kernel") {
+    // the two sketch queries are checked twins whose exact side reads raw
+    // events; their store side is the report, with the registry's arguments
+    val sketch = ExtQueries.sketchStore(spark, dir)
+    val reports = Seq("events_quantile_hist_stored", "events_quantile_hist_range",
+        "events_quantile_drift").map(q => q -> SparkEntry.queries(q)(spark, dir)) ++ Seq(
+      "events_distinct_sketch_stored" -> graft.ext.SketchStore.trailingDistinct(spark, sketch),
+      "events_distinct_sketch_range" ->
+        graft.ext.SketchStore.rangeDistinct(spark, sketch, "2024-01-08", "2024-01-21"))
+    for ((q, df) <- reports) {
+      val executed = df.queryExecution.executedPlan
+      val p = executed.toString
       assert(!p.contains("events.parquet"),
         s"$q scans raw events — the store exists so it never has to:\n${p.take(3000)}")
       assert(p.contains("days"), s"$q does not read the store's days relation\n${p.take(2000)}")
+      val heavy = PlanNodes.collect(executed) {
+        case n if n.nodeName.contains("Window") || n.nodeName == "Sort" ||
+          n.nodeName.contains("Aggregate") || n.nodeName.contains("Exchange") => n.nodeName
+      }
+      assert(heavy.isEmpty, s"$q plans $heavy — the report is one kernel over the store rows\n$p")
     }
   }
+
+  /** Plan-tree walks that look inside adaptive plans. */
+  private object PlanNodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 }

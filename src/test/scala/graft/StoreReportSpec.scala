@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import graft.ext.{HistStore, SketchStore}
 
 /** The histogram and sketch store reports over a hand-built store with gap
@@ -12,7 +12,7 @@ class StoreReportSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def ts(day: String) = java.sql.Timestamp.valueOf(s"2024-03-$day 12:00:00")
-  private def date(day: String) = java.sql.Date.valueOf(s"2024-03-$day")
+  private def date(day: String) = java.time.LocalDate.parse(s"2024-03-$day")
 
   /** Stored days 03-01, 03-02 and 03-06. Day 03-02 is split: the histogram
     * store holds it in its build, a flat append and a `days_stream` slot,
@@ -33,8 +33,18 @@ class StoreReportSpec extends AnyFunSuite {
     (hist, sketch)
   }
 
-  test("hand fixture with gap days: anchors are the stored days, n_days counts stored days in the window, split counts sum") {
+  /** The hand-fixture reports on session `s`, whose rows give dates as
+    * `dayClass`. */
+  private def checkHandFixture(s: SparkSession, dayClass: Class[_]): Unit = {
     val (hist, sketch) = stores
+    def day(r: Row) = {
+      val d = r.getAs[Any]("day")
+      assert(d.getClass === dayClass)
+      d match {
+        case d: java.time.LocalDate => d
+        case d: java.sql.Date => d.toLocalDate
+      }
+    }
     // windowDays = 3. Anchor 03-01: window [02-28, 03-01] holds 03-01 (bin 0
     // cnt 2, n 2). Anchor 03-02: 03-01 and 03-02 (bin 0 cnt 2, bin 1 cnt
     // 1 + 1 from build and append, bin 2 cnt 1 from the stream slot; n 5).
@@ -45,21 +55,35 @@ class StoreReportSpec extends AnyFunSuite {
     //   03-02: p50 t=2.5 crosses bin 1 (2 < 2.5 ≤ 4) → 5 + 0.25·5 = 6.25,
     //          p90 t=4.5 crosses bin 2 → 10 + 0.5·5 = 12.5, p99 t=4.95 → 14.75
     //   03-06: p50 t=0.5 → 2.5, p90 t=0.9 → 4.5, p99 t=0.99 → 4.95
-    val rep = HistStore.trailingQuantiles(spark, hist, windowDays = 3).collect()
-      .map(r => (r.getAs[java.sql.Date]("day"), r.getAs[Long]("n_days"), r.getAs[Long]("n"),
+    val rep = HistStore.trailingQuantiles(s, hist, windowDays = 3).collect()
+      .map(r => (day(r), r.getAs[Long]("n_days"), r.getAs[Long]("n"),
         r.getAs[Double]("est_p50"), r.getAs[Double]("est_p90"), r.getAs[Double]("est_p99")))
       .toSeq
     assert(rep === Seq(
       (date("01"), 1L, 2L, 2.5, 4.5, 4.95),
       (date("02"), 2L, 5L, 6.25, 12.5, 14.75),
       (date("06"), 1L, 1L, 2.5, 4.5, 4.95)))
+    // drift over the same report: 03-02 against 03-01 (6.25 vs 2.5, shift
+    // 1.5) and 03-06 against 03-02 (2.5 vs 6.25, shift 0.6)
+    val drift = HistStore.quantileDrift(s, hist, windowDays = 3).collect()
+      .map(r => (day(r), r.getAs[Double]("shift"), r.getAs[Int]("drifted"))).toSeq
+    assert(drift === Seq((date("02"), 1.5, 1), (date("06"), 0.6, 1)))
     // users: 03-01 {1, 2}, 03-02 {2, 3} + appended {4}, 03-06 {5}; the
     // rounded HLL estimate is exact at this cardinality
-    val sk = SketchStore.trailingDistinct(spark, sketch, windowDays = 3).orderBy("day").collect()
-      .map(r => (r.getAs[java.sql.Date]("day"), r.getAs[Long]("n_days"),
-        r.getAs[Long]("approx_users")))
+    val sk = SketchStore.trailingDistinct(s, sketch, windowDays = 3).collect()
+      .map(r => (day(r), r.getAs[Long]("n_days"), r.getAs[Long]("approx_users")))
       .toSeq
     assert(sk === Seq((date("01"), 1L, 2L), (date("02"), 2L, 4L), (date("06"), 1L, 1L)))
+  }
+
+  test("hand fixture with gap days: anchors are the stored days, n_days counts stored days in the window, split counts sum") {
+    checkHandFixture(spark, classOf[java.sql.Date])
+  }
+
+  test("the hand fixture answers the same when rows give dates as java.time.LocalDate") {
+    val java8 = spark.newSession()
+    java8.conf.set("spark.sql.datetime.java8API.enabled", "true")
+    checkHandFixture(java8, classOf[java.time.LocalDate])
   }
 
   test("building each store report runs no Spark job, and collecting it runs exactly one") {
