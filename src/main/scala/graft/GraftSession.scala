@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession factory. [[Verify]] and the test session build
   * through [[apply]], so the oracle check and the specs run under one
-  * conf. The only parameter is the core count; everything else is a
-  * constant here. */
+  * conf. It sets deployment settings only (master, shuffle width,
+  * timezone, UI, warehouse dir, log level) and leaves every tuning key at
+  * Spark's default, the same conf the perfbench harness times. The only
+  * parameter is the core count. */
 object GraftSession {
 
   /** Core count: `SPARK_GRAFT_CPUS` when set, else this machine's
@@ -30,28 +32,6 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      // Each value below was A/B'd at 32 and 8 cores (OPTIMIZATION_r16.md
-      // item #2). Those A/Bs always ran the base in the slow first slot;
-      // unbiased runs found the total flat, so treat the gains as
-      // unconfirmed.
-      // - parallelismFirst=false: AQE coalesces post-shuffle partitions to
-      //   the advisory size instead of preserving core-count parallelism
-      //   (32c total 200.2→155.9 s, 8c 190.5→140.8 s). The compute-dense
-      //   exceptions (Σ df² pair tiles, the levenshtein DP) pin their own
-      //   width via Dedup.explodingJoinParts, which AQE honors.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // - advisory 4m is the local grain: sf0.1's per-core work quantum
-      //   (the 64m default folded 10-70 MB CPU-bound stages to ONE
-      //   partition — dedup_containment +47%). A 100 TB deployment wants
-      //   100 MB-1 GB reduce partitions; no operator assumes this value.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      // - 512m input splits cut the scan-task count; measured neutral to
-      //   positive at sf0.1 (155.9 vs 158.9 s).
-      .config("spark.sql.files.maxPartitionBytes", "512m")
-      // - shuffle codec: zstd vs lz4 measured a wash at sf0.1 (median
-      //   ratio 1.004 over the shuffle-heavy subset, 4 alternating JVMs);
-      //   shuffles here are too small to tell them apart.
-      .config("spark.io.compression.codec", "lz4")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

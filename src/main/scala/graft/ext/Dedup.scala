@@ -41,27 +41,6 @@ object Dedup {
     if (df.rdd.getNumPartitions < par) df.repartition(par) else df
   }
 
-  /** Partition count for a COMPUTE-EXPANDING stage over a MATERIALIZED
-    * relation (r16, guide §2.5/§3): AQE's partition coalescing sizes each
-    * exchange by its INPUT bytes, but a df-capped pair self-join does Σ df²
-    * work per shingle and an edit-distance verify does an O(len·maxEdit)
-    * DP per row — orders beyond the input bytes — so under
-    * parallelismFirst=false a few-MB input folds to one partition and the
-    * compute serializes (measured: dedup_ngram_jaccard 1.74 → 2.29 s,
-    * dedup_edit_clusters 2.46 → 3.49 s at 8 cores). The optimizer cannot
-    * see the expansion; we can. Width derives from the relation's TRUE row
-    * count (one cheap count over the already-materialized blocks — NOT
-    * logical-plan stats, which for a checkpointed relation are the
-    * defaultSizeInBytes placeholder and once sized a 7k-row relation at
-    * 2²⁰ partitions) at a per-task row grain, with a cluster-cores floor
-    * and a 2¹⁴ cap — scale-adaptive in both directions: a 100 TB index
-    * gets rows/grain partitions, a tiny one still gets every core. */
-  private def explodingJoinParts(rel: DataFrame, rowsPerTask: Long): Int = {
-    val par = rel.sparkSession.sparkContext.defaultParallelism
-    val byRows = math.min(rel.count() / math.max(1L, rowsPerTask) + 1, 1L << 14).toInt
-    math.max(par, byRows)
-  }
-
   /** Word n-gram shingles as a column expression (empty array when the doc
     * has fewer than n tokens — sequence() would run descending otherwise). */
   def shinglesExpr(n: Int): String =
@@ -117,40 +96,39 @@ object Dedup {
     * place the plain capped join is the better plan at every scale; the
     * sub-quadratic escape hatch for truly huge corpora stays minhashLsh. */
   def ngramJaccard(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
-                   maxDocFreq: Int = 50): DataFrame = {
+                   maxDocFreq: Int = 50): DataFrame =
+    sharedShingles(docs, n, maxDocFreq)
+      .withColumn("jaccard", expr("c / (na + nb - c)"))
+      .filter(col("jaccard") >= threshold)
+      .select(col("a"), col("b"), expr("round(jaccard, 6)").as("jaccard"))
+      .orderBy("a", "b")
+
+  /** The shared-shingle relation behind [[ngramJaccard]] and
+    * [[containment]]: one row per doc pair `a < b` that shares at least
+    * one DF-capped shingle, with `c` = |A∩B| and `na`, `nb` = |A|, |B|
+    * over the capped shingle space.
+    *
+    * Cost profile (measured, sf0.1): the capped self-join's pair expansion
+    * (Σ df² — 1.1M intersection rows from a 260k-row index) dominates.
+    * The expansion IS the exact algorithm's price — the sub-quadratic path
+    * at scale is minhashLsh below, same verify core. The DF-capped index
+    * is materialized once: it feeds the size relation and BOTH sides of
+    * the pair join, and unmaterialized each of the three references re-ran
+    * the shingle explode + md5 hashing over the corpus. */
+  private def sharedShingles(docs: DataFrame, n: Int, maxDocFreq: Int): DataFrame = {
     val w = Window.partitionBy("shingle")
-    // cost profile (measured, sf0.1): the capped self-join's pair expansion
-    // (Σ df² — 1.1M intersection rows from a 260k-row index) dominates;
-    // index recompute across the four consumers is minor and persisting it
-    // bought nothing. The expansion IS the exact algorithm's price — the
-    // sub-quadratic path at scale is minhashLsh below, same verify core.
-    // r15: materialize the DF-capped index once — it feeds the size
-    // relation and BOTH sides of the pair join; unmaterialized, each of
-    // the three references re-ran the shingle explode + md5 hashing over
-    // the corpus.
     val sh = shingleIndex(docs, n)
       .withColumn("df", count(lit(1)).over(w))
       .filter(col("df") <= maxDocFreq)
       .select("doc_id", "shingle")
       .materialize()
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    // explicit parallelism floor on BOTH pair-join sides (see
-    // explodingJoinParts): user-specified repartition widths are exempt
-    // from AQE coalescing, and equal hash partitioning on the join key
-    // means the join adds no further exchange — same exchange count as
-    // the ENSURE_REQUIREMENTS plan, pinned width.
-    val np = explodingJoinParts(sh, rowsPerTask = 262144)
-    val inter = sh.toDF("a", "shingle").repartition(np, col("shingle"))
-      .join(sh.toDF("b", "shingle").repartition(np, col("shingle")), "shingle")
+    sh.toDF("a", "shingle")
+      .join(sh.toDF("b", "shingle"), "shingle")
       .filter(col("a") < col("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("c"))
-    inter
       .join(sizes.toDF("a", "na"), "a")
       .join(sizes.toDF("b", "nb"), "b")
-      .withColumn("jaccard", expr("c / (na + nb - c)"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), expr("round(jaccard, 6)").as("jaccard"))
-      .orderBy("a", "b")
   }
 
   /** ASYMMETRIC n-gram CONTAINMENT pairs — the doc-inside-doc detector
@@ -171,28 +149,12 @@ object Dedup {
     * at scale: [[minhashLsh]]'s banding, with containment verified on the
     * candidate pairs instead of Jaccard. */
   def containment(docs: DataFrame, n: Int = 3, threshold: Double = 0.6,
-                  maxDocFreq: Int = 50): DataFrame = {
-    val w = Window.partitionBy("shingle")
-    // r15: same three-reference materialization as [[ngramJaccard]].
-    val sh = shingleIndex(docs, n)
-      .withColumn("df", count(lit(1)).over(w))
-      .filter(col("df") <= maxDocFreq)
-      .select("doc_id", "shingle")
-      .materialize()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    // same exploding-join parallelism floor as [[ngramJaccard]]
-    val np = explodingJoinParts(sh, rowsPerTask = 262144)
-    val inter = sh.toDF("a", "shingle").repartition(np, col("shingle"))
-      .join(sh.toDF("b", "shingle").repartition(np, col("shingle")), "shingle")
-      .filter(col("a") < col("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("c"))
+                  maxDocFreq: Int = 50): DataFrame =
     // both directions from ONE pass over the intersection relation: a
     // 2-element explode per undirected pair, NOT a self-union (a union's
     // branches each rebuild the whole join tree pre-AQE; the explode is a
     // narrow map over rows already in hand)
-    inter
-      .join(sizes.toDF("a", "na"), "a")
-      .join(sizes.toDF("b", "nb"), "b")
+    sharedShingles(docs, n, maxDocFreq)
       .select(explode(array(
         struct(col("a").as("contained"), col("b").as("container"),
           expr("c / na").as("containment")),
@@ -203,7 +165,6 @@ object Dedup {
       .select(col("contained"), col("container"),
         expr("round(containment, 6)").as("containment"))
       .orderBy("contained", "container")
-  }
 
   /** Eval-set decontamination — the training-corpus hygiene check every LLM
     * pipeline runs before training: flag training documents that share any
@@ -428,27 +389,17 @@ object Dedup {
   def editDistanceVerified(docs: DataFrame, threshold: Double = 0.8,
                            maxEdit: Int = 64): DataFrame = {
     require(maxEdit >= 1, s"maxEdit $maxEdit must be >= 1")
-    // r16: materialize the LSH pair set (true size → the planner
-    // broadcasts it under the text joins instead of exchanging the corpus
-    // side twice by estimate) and pin the DP stage's width: the
-    // levenshtein pass is COMPUTE-heavy per row (O(len·maxEdit) DP),
-    // which AQE's byte-based coalescing cannot see — under
-    // parallelismFirst=false the few-MB pair relation folded to one
-    // partition and the DP serialized (measured at 8 cores: 2.46 → 3.49 s
-    // before this floor). Width derives from the pair relation's TRUE
-    // size at advisory granularity with a cores floor (explodingJoinParts
-    // — scale-adaptive in both directions).
+    // materialize the LSH pair set: its true size lets the planner
+    // broadcast it under the text joins instead of exchanging the corpus
+    // side twice by estimate
     val pairs = minhashLsh(docs, threshold).materialize()
-    val np = explodingJoinParts(pairs, rowsPerTask = 16384)
     val t = docs.select(col("doc_id"), col("text"))
     // one equi-join per role: the LSH-bounded pair set is tiny relative
     // to the corpus, so each text relation streams through once; the DP
     // itself never crosses an exchange
     pairs
       .join(t.select(col("doc_id").as("a"), col("text").as("ta")), "a")
-      .repartition(np, col("b"))
-      .join(t.select(col("doc_id").as("b"), col("text").as("tb"))
-        .repartition(np, col("b")), "b")
+      .join(t.select(col("doc_id").as("b"), col("text").as("tb")), "b")
       .withColumn("edit_dist",
         levenshtein(col("ta"), col("tb"), maxEdit).cast("bigint"))
       .withColumn("max_len",
@@ -912,14 +863,11 @@ object Dedup {
     * (~diameter rounds). */
   private[graft] def clustersWithRounds(pairs: DataFrame,
                                         shortcut: Boolean = true): (DataFrame, Int) = {
-    // serialized storage: both materializations below can hold a
-    // pair-sized relation (UnsafeRow pairs are ~30 bytes)
-    val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val ab = pairs.select(col("a"), col("b"))
     def ordered(labels: DataFrame): DataFrame =
       labels.select(col("id").as("doc_id"), col("label").as("cluster_id")).orderBy("doc_id")
     if (!shortcut) {
-      val (labels, rounds) = propagateLoop(ab.materialize(ser), shortcut = false)
+      val (labels, rounds) = propagateLoop(ab.materialize(), shortcut = false)
       return (ordered(labels), rounds)
     }
     val spark = pairs.sparkSession
@@ -934,7 +882,7 @@ object Dedup {
         uf.labels
       }
       .toDF("a", "b")
-      .materialize(ser)
+      .materialize()
     if (nForest.value <= maxLocalEdges) {
       val local = forest.as[(Long, Long)]
         .coalesce(1)

@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** The ONE seam for intermediate-relation materialization (r16, VERDICT
   * r15 #4 / ADVICE r15): every operator that pins a multi-referenced
@@ -25,6 +24,10 @@ import org.apache.spark.storage.StorageLevel
   * conf, not a per-call-site decision — flipping one conf converts all
   * ~25 materialization sites at once.
   *
+  * One form per posture: no call site picks a storage level, because the
+  * reliable path keeps its blocks in the checkpoint directory and could
+  * not honor one.
+  *
   * Nothing here caches ACROSS runs or queries: both forms live and die
   * with the DataFrame reference inside one query execution, exactly like
   * the direct localCheckpoint calls they replace. */
@@ -39,11 +42,5 @@ private[graft] object Materialize {
       * reliable checkpoint under `spark.graft.materialize.reliable=true`. */
     def materialize(): DataFrame =
       if (reliable(df)) df.checkpoint() else df.localCheckpoint()
-
-    /** As [[materialize()*]] with an explicit storage level for the
-      * local (default) path; the reliable path ignores the level — its
-      * blocks live in the checkpoint directory, not the block manager. */
-    def materialize(level: StorageLevel): DataFrame =
-      if (reliable(df)) df.checkpoint() else df.localCheckpoint(true, level)
   }
 }

@@ -697,8 +697,7 @@ object Similarity {
       // 8% — before; the rounds must scan the sample, not the corpus).
       // At 100 TB the same posture writes the slice out once and trains
       // on the materialized relation.
-      .materialize(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .materialize()
   }
 
   /** [[kmeansRun]] trained through [[lloydFinalHier]]'s two-level per-round

@@ -195,6 +195,23 @@ class ExtDedupSpec extends AnyFunSuite {
       5L -> 5L, 6L -> 5L, 4L -> 4L, 9L -> 4L))
   }
 
+  test("building the exact pair joins runs no count job") {
+    // only the materializations run while building: the DF-capped shingle
+    // index (ngramJaccard, containment) and the LSH pair set
+    // (editDistanceVerified); AQE runs each as its query-stage jobs
+    val docs = docsDf(
+      1L -> "one two three four five six seven eight",
+      2L -> "one two three four five six seven eight",
+      3L -> "one two three four five six seven nine",
+      4L -> "alpha beta gamma delta epsilon zeta eta theta")
+    val jobs = Seq(
+      "ngramJaccard" -> SparkTestSession.jobsIn(Dedup.ngramJaccard(docs))._2,
+      "containment" -> SparkTestSession.jobsIn(Dedup.containment(docs))._2,
+      "editDistanceVerified" -> SparkTestSession.jobsIn(Dedup.editDistanceVerified(docs))._2)
+    assert(jobs === Seq("ngramJaccard" -> 2, "containment" -> 2,
+      "editDistanceVerified" -> 6))
+  }
+
   test("a malformed or negative maxLocalEdges conf fails loudly, naming the key") {
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
     for (bad <- Seq("4M", "-1")) {

@@ -26,6 +26,14 @@ class GraftSessionSpec extends AnyFunSuite {
   test("the test session runs under the factory's conf") {
     val conf = SparkTestSession.spark.conf
     assert(SparkTestSession.spark.sparkContext.master === "local[4]")
-    assert(conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst") === "false")
+    // tuning stays out of the factory: these keys read Spark's defaults,
+    // the conf the perfbench harness times
+    val defaults = new org.apache.spark.sql.internal.SQLConf
+    for (key <- Seq("spark.sql.adaptive.coalescePartitions.parallelismFirst",
+                    "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+                    "spark.sql.files.maxPartitionBytes")) {
+      assert(!SparkTestSession.spark.sparkContext.getConf.contains(key), key)
+      assert(conf.get(key) === defaults.getConfString(key), key)
+    }
   }
 }
