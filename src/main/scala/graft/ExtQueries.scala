@@ -52,9 +52,6 @@ object ExtQueries {
       .map("%02x".format(_)).mkString.take(16)
   }
 
-  private def deleteRecursively(f: java.io.File): Unit =
-    graft.ops.Scale.deleteRecursively(f)
-
   /** Shared store-cache lifecycle: sweep, build, atomic-publish.
     *
     * The /tmp cache is content-keyed (fixture fingerprint in the dir
@@ -82,7 +79,7 @@ object ExtQueries {
     Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith(prefix + "_") && f.getName != storeName)
       .filter(f => now - f.lastModified() > sweepAgeMs)
-      .foreach(deleteRecursively)
+      .foreach(graft.ops.Scale.deleteRecursively)
     val storePath = java.nio.file.Paths.get(store)
     if (!java.nio.file.Files.exists(storePath.resolve(successRel))) {
       val tmp = java.nio.file.Paths.get(
@@ -95,7 +92,7 @@ object ExtQueries {
           // a concurrent builder published first — use theirs, drop ours
           require(java.nio.file.Files.exists(storePath.resolve(successRel)),
             s"store publish failed and no winner exists at $store")
-          deleteRecursively(tmp.toFile)
+          graft.ops.Scale.deleteRecursively(tmp.toFile)
       }
     }
     // refresh the store's age on EVERY use, not just at build: the sweep

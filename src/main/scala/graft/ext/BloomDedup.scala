@@ -149,7 +149,6 @@ object BloomDedup {
   // ---- store lifecycle --------------------------------------------------
 
   private def binPath(storeDir: String) = s"$storeDir/bloom.bin"
-  private def metaPath(storeDir: String) = s"$storeDir/meta.txt"
 
   /** Write `storeDir/{bloom.bin, meta.txt, _SUCCESS}` via the family's
     * build-then-atomic-swap discipline. meta.txt records the sizing params
@@ -201,18 +200,14 @@ object BloomDedup {
       java.nio.file.Paths.get(binPath(storeDir))), textCol)
   }
 
-  /** Read the store's recorded sizing params, refusing a torn store: the
+  /** Read the store's recorded sizing params through the shared
+    * [[graft.ops.StoreLifecycle.readMeta]], which refuses a torn store: the
     * `_SUCCESS` marker is written last inside the published snapshot, so
     * its absence means a half-written or foreign directory. Package-open
     * so composite stores (the triage root) can VALIDATE their embedded
     * Bloom snapshot before copying it forward at compact time. */
   private[ext] def readMeta(storeDir: String): (Long, Double) = {
-    require(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$storeDir/_SUCCESS")),
-      s"no _SUCCESS marker at $storeDir — not a published Bloom store")
-    val meta = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(metaPath(storeDir))), "UTF-8")
-    val kv = meta.linesIterator.map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap
+    val kv = graft.ops.StoreLifecycle.readMeta(storeDir)
     (kv("expectedItems").toLong, kv("fpp").toDouble)
   }
 

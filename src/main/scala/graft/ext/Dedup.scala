@@ -3,7 +3,6 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ext.Materialize._
 
 /** Deduplication operators for LLM-data pipelines (SURVEY.md §2.8 E1):
   * exact, n-gram Jaccard, MinHash+LSH, SimHash, and embedding-cosine
@@ -121,7 +120,7 @@ object Dedup {
       .withColumn("df", count(lit(1)).over(w))
       .filter(col("df") <= maxDocFreq)
       .select("doc_id", "shingle")
-      .materialize()
+      .localCheckpoint()
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     sh.toDF("a", "shingle")
       .join(sh.toDF("b", "shingle"), "shingle")
@@ -392,7 +391,7 @@ object Dedup {
     // materialize the LSH pair set: its true size lets the planner
     // broadcast it under the text joins instead of exchanging the corpus
     // side twice by estimate
-    val pairs = minhashLsh(docs, threshold).materialize()
+    val pairs = minhashLsh(docs, threshold).localCheckpoint()
     val t = docs.select(col("doc_id"), col("text"))
     // one equi-join per role: the LSH-bounded pair set is tiny relative
     // to the corpus, so each text relation streams through once; the DP
@@ -797,7 +796,7 @@ object Dedup {
     // joins reuse it, instead of each re-running the Bloom probe over the
     // increment (three passes where one narrow one suffices)
     val probeKeys = probed.filter(col("bloom_hit")).select("k").distinct()
-      .materialize()
+      .localCheckpoint()
     val useBroadcast = probeKeys.count() <= maxBroadcastKeys
     def hinted(df: DataFrame): DataFrame = if (useBroadcast) broadcast(df) else df
     val hits = spark.read.parquet(s"$storeDir/keys")
@@ -843,36 +842,36 @@ object Dedup {
     *     count comes from that same job through an accumulator (a task
     *     re-run can only overcount, which picks the distributed path —
     *     same labels).
-    *  2. At execute, when the forest has at most
-    *     `spark.graft.clusters.maxLocalEdges` rows (default 4M; 0 = always
-    *     distributed), one `coalesce(1)` task runs the same union-find over
-    *     it and emits the labels, sorted within that one partition. The
+    *  2. At execute, when the forest has at most `maxLocalEdges` rows
+    *     (4M; the spec passes 0 to force the distributed path), one
+    *     `coalesce(1)` task runs the same union-find over it and emits
+    *     the labels, sorted within that one partition. The
     *     contracted remainder of a near-dup graph is tiny but
     *     chain-shaped, and on chains distributed propagation degrades to
     *     one Spark round per hop (OPTIMIZATION_r15.md,
     *     "Connected-components closure").
     *     Footprint (ADVICE r15): 4M rows reach ≤8M nodes; the primitive
     *     map keeps 17 B/slot at ≤50% load, worst case ~270 MB in one
-    *     executor task; lower the conf for smaller executors. Above the
-    *     ceiling, min-label propagation with pointer doubling runs over
-    *     the forest edges, so no path assumes a bounded task.
+    *     executor task. Above the ceiling, min-label propagation with
+    *     pointer doubling runs over the forest edges, so no path assumes
+    *     a bounded task.
     * Building the result runs one Spark job, the forest materialization.
     *
     * `shortcut = false` is the reference the production path is spec'd
     * against: plain one-hop min-label propagation over the raw pairs
     * (~diameter rounds). */
   private[graft] def clustersWithRounds(pairs: DataFrame,
-                                        shortcut: Boolean = true): (DataFrame, Int) = {
+                                        shortcut: Boolean = true,
+                                        maxLocalEdges: Long = 4L << 20): (DataFrame, Int) = {
     val ab = pairs.select(col("a"), col("b"))
     def ordered(labels: DataFrame): DataFrame =
       labels.select(col("id").as("doc_id"), col("label").as("cluster_id")).orderBy("doc_id")
     if (!shortcut) {
-      val (labels, rounds) = propagateLoop(ab.materialize(), shortcut = false)
+      val (labels, rounds) = propagateLoop(ab.localCheckpoint(), shortcut = false)
       return (ordered(labels), rounds)
     }
     val spark = pairs.sparkSession
     import spark.implicits._
-    val maxLocalEdges = maxLocalEdgesConf(spark)
     val nForest = spark.sparkContext.longAccumulator
     val forest = ab.as[(Long, Long)]
       .mapPartitions { it =>
@@ -882,7 +881,7 @@ object Dedup {
         uf.labels
       }
       .toDF("a", "b")
-      .materialize()
+      .localCheckpoint()
     if (nForest.value <= maxLocalEdges) {
       val local = forest.as[(Long, Long)]
         .coalesce(1)
@@ -902,21 +901,11 @@ object Dedup {
     }
   }
 
-  /** `spark.graft.clusters.maxLocalEdges`: a non-negative row count, else
-    * fail loudly naming the key. */
-  private def maxLocalEdgesConf(spark: SparkSession): Long = {
-    val key = "spark.graft.clusters.maxLocalEdges"
-    spark.conf.getOption(key).fold(4L * 1024 * 1024) { v =>
-      v.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
-        s"$key must be a non-negative integer (0 = always distributed), got '$v'"))
-    }
-  }
-
   /** Min-label propagation to fixpoint over the symmetrized pairs (a, b),
     * with optional pointer doubling (L(u) ← L(L(u)) — the Shiloach-Vishkin
     * shortcut, O(log diameter) rounds; labels only ever decrease, so
     * least() is exact). Each round is one co-partitioned edge-label join +
-    * partial-min shuffle, and `materialize` truncates the growing lineage
+    * partial-min shuffle, and `localCheckpoint` truncates the growing lineage
     * per round. Returns (id → label, rounds). Convergence is detected by
     * the EXACT decimal sum of labels: the node set is fixed and every
     * per-node label is non-increasing round over round, so the sum is
@@ -932,7 +921,7 @@ object Dedup {
     }
     var labels = edges.select(col("id"), least(col("id"), col("nbr")).as("label"))
       .groupBy("id").agg(min("label").as("label"))
-      .materialize()
+      .localCheckpoint()
     var prevSum = labelSum(labels)
     var rounds = 0
     var converged = labels.isEmpty
@@ -942,7 +931,7 @@ object Dedup {
         .unionAll(labels)
         .groupBy("id").agg(min("label").as("label"))
       val next =
-        if (!shortcut) prop.materialize()
+        if (!shortcut) prop.localCheckpoint()
         else {
           // L(L(u)): every label IS a node id of the same component, so it
           // has its own label row; the left join + coalesce is defensive.
@@ -951,7 +940,7 @@ object Dedup {
               Seq("label"), "left")
             .select(col("id"),
               least(col("label"), coalesce(col("label2"), col("label"))).as("label"))
-            .materialize()
+            .localCheckpoint()
         }
       val nextSum = labelSum(next)
       converged = nextSum.compareTo(prevSum) == 0
@@ -1320,7 +1309,7 @@ object Dedup {
     // candidate join and the n_truth total, and unmaterialized each
     // reference re-ran the full MinHash-LSH pipeline.
     val truth = minhashLsh(docs).select(col("a"), col("b"), lit(1).as("is_true"))
-      .materialize()
+      .localCheckpoint()
     val joined = simhashPairs(docs, maxHamming)
       .join(truth, Seq("a", "b"), "left")
       .withColumn("is_true", coalesce(col("is_true"), lit(0)))
@@ -1426,7 +1415,7 @@ object Dedup {
       // r15: materialize the window-hash relation — referenced by the
       // duplicate/keeper agg and the hit join(s); each lazy reference
       // re-ran the native window-hash explode over the corpus.
-      .materialize()
+      .localCheckpoint()
     val dup = wins.groupBy("h")
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= 2).select("h")
@@ -1475,7 +1464,7 @@ object Dedup {
       .filter(expr("size(split(text, ' '))") >= k)
       .select(col("source"), explode(expr(s"shingle_hash60_pos(text, $k)")).as("h"))
       .distinct()
-      .materialize()
+      .localCheckpoint()
     val totals = sh.groupBy("source").agg(count(lit(1)).as("n"))
     val pairs = sh.toDF("a", "h")
       .join(sh.toDF("b", "h"), "h")
@@ -1546,7 +1535,7 @@ object Dedup {
       // r15: materialize the window-hash relation — referenced by the
       // duplicate/keeper agg and the hit join(s); each lazy reference
       // re-ran the native window-hash explode over the corpus.
-      .materialize()
+      .localCheckpoint()
     val dup = wins.groupBy("h")
       .agg(countDistinct(col("doc_id")).as("nd"), min(col("doc_id")).as("keeper"))
       .filter(col("nd") >= 2).select("h", "keeper")
@@ -1726,7 +1715,7 @@ object Dedup {
       // r15: materialize the window-hash relation — referenced by the
       // duplicate/keeper agg and the hit join(s); each lazy reference
       // re-ran the native window-hash explode over the corpus.
-      .materialize()
+      .localCheckpoint()
     val histHits = wins.join(store, Seq("h"), "left_semi").select("doc_id", "pos")
     val fresh = wins.join(store, Seq("h"), "left_anti")
     val dupNew = fresh.groupBy("h")

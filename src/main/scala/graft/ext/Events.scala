@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
-import graft.ext.Materialize._
 
 /** Event-stream analytics over the `events` table (SURVEY.md §2.8 E4/E5):
   * gap sessionization, tumbling windows, JSON-prop extraction, approximate
@@ -277,7 +276,7 @@ object Events {
       // r15: materialize the session-incidence relation — the session
       // total, the per-type counts and BOTH pair-join sides read it, and
       // each reference re-ran the sessionize window + distinct.
-      .materialize()
+      .localCheckpoint()
     val totals = st.select("user_id", "session_id").distinct()
       .agg(count(lit(1)).as("s_total"))
     val typeN = st.groupBy("event_type").agg(count(lit(1)).as("n"))
@@ -332,7 +331,7 @@ object Events {
       .agg(min(tsMs).as("first_ms"))
       // r15: same multi-reference materialization as [[cooccurrence]] —
       // the uncapped totals and the capped relation both read st.
-      .materialize()
+      .localCheckpoint()
     val bySession = Window.partitionBy("user_id", "session_id")
       .orderBy(col("first_ms").asc, col("event_type").asc)
     val capped = st
@@ -341,7 +340,7 @@ object Events {
       .select("user_id", "session_id", "event_type")
       // ...and the per-type counts plus BOTH pair sides read the capped
       // incidence set.
-      .materialize()
+      .localCheckpoint()
     val totals = st.select("user_id", "session_id").distinct()
       .agg(count(lit(1)).as("s_total"))
     val typeN = capped.groupBy("event_type").agg(count(lit(1)).as("n"))

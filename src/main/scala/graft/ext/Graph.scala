@@ -3,7 +3,6 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ext.Materialize._
 
 /** Graph analytics over document-similarity graphs (SURVEY.md §2.8).
   *
@@ -68,10 +67,10 @@ object Graph {
     // (too-big sides at 100× stay SMJ). Measured sf0.1 min-of-2:
     // 9.36 s → 6.49 s uncapped, 2.84 s → 1.69 s capped, fingerprints
     // bit-identical (OPTIMIZATION_r15.md, "Graph family").
-    val e = edges.select(col("a"), col("b")).materialize()
+    val e = edges.select(col("a"), col("b")).localCheckpoint()
     val deg = e.select(col("a").as("id")).unionAll(e.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("degree"))
-      .materialize()
+      .localCheckpoint()
     // orient every edge low→high under the (degree, id) total order; carry
     // the dst's order key for the wedge comparison below
     val dir = e
@@ -84,7 +83,7 @@ object Graph {
           .otherwise(col("a")).as("dst"),
         when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("db"))
           .otherwise(col("da")).as("ddeg"))
-      .materialize()
+      .localCheckpoint()
     // wedge budget: enumerate wedges only from each apex's k smallest
     // oriented out-edges; the window shuffles on src — the same key the
     // wedge self-join hashes on, so the exchange is reused, not added
@@ -149,11 +148,11 @@ object Graph {
     // 1.69 s including the checkpoint cost, bit-identical (integer math is
     // materialization-invariant). True sizes also let the planner broadcast
     // the per-round rank relation instead of estimating.
-    val e = edges.select(col("a"), col("b")).materialize()
+    val e = edges.select(col("a"), col("b")).localCheckpoint()
     val und = e.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
     val deg = und.groupBy("src").agg(count(lit(1)).as("degree"))
-      .materialize()
+      .localCheckpoint()
     var pr = deg.select(col("src").as("id"), col("degree"), lit(1000000L).as("pr"))
     for (i <- 1 to iterations) {
       val contrib = pr.select(col("id").as("src"), expr("pr div degree").as("c"))
@@ -162,7 +161,7 @@ object Graph {
         .join(inbound.select(col("dst").as("id"), col("s")), "id")
         .select(col("id"), col("degree"),
           expr("150000L + (85L * s) div 100L").as("pr"))
-      if (i % checkpointEvery == 0 && i < iterations) pr = pr.materialize()
+      if (i % checkpointEvery == 0 && i < iterations) pr = pr.localCheckpoint()
     }
     pr.select(col("id").as("doc_id"), col("degree"), col("pr").as("pagerank"))
       .orderBy("doc_id")
@@ -203,7 +202,7 @@ object Graph {
     // the per-component edge count below; unmaterialized, the nEdges join
     // re-executed the whole pair-generation pipeline a second time
     // (measured ~1.3 s of the query's 4.4 s at sf0.1).
-    val e = edges.select(col("a"), col("b")).materialize()
+    val e = edges.select(col("a"), col("b")).localCheckpoint()
     val labs = Dedup.clusters(e)
       .select(col("doc_id").as("id"), col("cluster_id").as("component_id"))
     val nEdges = e.join(labs.select(col("id").as("a"), col("component_id")), "a")
@@ -220,7 +219,7 @@ object Graph {
     // r15: materialize the edge list once — the two union branches each
     // carried the full pair-generation subtree (two executions of the
     // simhash band pipeline for one histogram).
-    val e = edges.select(col("a"), col("b")).materialize()
+    val e = edges.select(col("a"), col("b")).localCheckpoint()
     val deg = e.select(col("a").as("id")).unionAll(e.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("degree"))
     val hist = deg.groupBy("degree").agg(count(lit(1)).as("n_nodes"))

@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ext.Materialize._
 
 /** CCNet-style LM-perplexity quality filtering — the classic
   * train-on-reference / score-everything / bucket-by-tertile pipeline
@@ -121,7 +120,7 @@ object LmFilter {
     // reference re-ran the reference-slice token explode.
     val uni = ref.select(col("lang"), explode(col("w")).as("token"))
       .groupBy("lang", "token").agg(count(lit(1)).cast("long").as("uf"))
-      .materialize()
+      .localCheckpoint()
     val big = ref.filter(expr("size(w) >= 2"))
       .select(col("lang"), explode(expr(
         """transform(sequence(1, size(w) - 1), i ->
@@ -210,7 +209,7 @@ object LmFilter {
     // executor-local materialization now; the skew-free shape is kept
     // (no per-language window).
     val scored = scoreTerms(termRel(docs, refMod), uni, big, tots, lambda)
-      .materialize()
+      .localCheckpoint()
     bucketCols(scored.join(broadcast(tertileCuts(scored)), Seq("lang"), "left"))
       .orderBy("doc_id")
   }

@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ext.Materialize._
 
 /** Deterministic sampling / split assignment for training-data pipelines
   * (SURVEY.md §2.8): every production corpus needs reproducible subsets —
@@ -206,7 +205,7 @@ object Sampling {
     // r15: materialize the feature relation — the log-ratio fit and the
     // scoring tail both read it, and unmaterialized each reference re-ran
     // the md5 feature explode over the corpus.
-    val feats = dsirFeatures(docs, targetMod, dim).materialize()
+    val feats = dsirFeatures(docs, targetMod, dim).localCheckpoint()
     // in-line: the log-ratio table is fit on the SAME corpus, so every
     // doc bucket is covered and the default never fires
     dsirScoreWith(feats, dsirLogRatios(feats, dim), lit(0d))
@@ -295,7 +294,7 @@ object Sampling {
       // r15: materialize the keyed relation — the threshold percentile and
       // the selection projection both read it (two full weight pipelines
       // otherwise; the quantile-threshold shape itself stays skew-free).
-      .materialize()
+      .localCheckpoint()
     val thr = keyed.agg(expr(s"percentile(gumbel_key, ${1 - frac}e0)").as("t"))
     keyed.crossJoin(broadcast(thr))
       .select(col("doc_id"), col("in_target"), col("weight"),

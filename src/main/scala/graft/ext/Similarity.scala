@@ -3,7 +3,6 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ext.Materialize._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (SURVEY.md §2.8 E2).
@@ -697,7 +696,7 @@ object Similarity {
       // 8% — before; the rounds must scan the sample, not the corpus).
       // At 100 TB the same posture writes the slice out once and trains
       // on the materialized relation.
-      .materialize()
+      .localCheckpoint()
   }
 
   /** [[kmeansRun]] trained through [[lloydFinalHier]]'s two-level per-round
@@ -1764,7 +1763,7 @@ object Similarity {
       // plans and runs ONCE — both the id collect and the join read the
       // checkpointed leaf. Batch queries keep full lineage (plan-locked).
       val probes =
-        if (materializeProbes) probesPlan.materialize() else probesPlan
+        if (materializeProbes) probesPlan.localCheckpoint() else probesPlan
       val probedIds = probes.select("list_id").distinct()
         .collect().map(_.getLong(0))
       val lists = spark.read.parquet(listsPath)
@@ -1810,10 +1809,6 @@ object Similarity {
             .withColumn("list_id", probeList)
             .drop("scores")
     }
-
-  private[graft] def storeProbeCols(queryVecs: DataFrame, storeDir: String,
-                                    nProbe: Int): DataFrame =
-    storeProbeColsFn(queryVecs.sparkSession, storeDir, nProbe)(queryVecs)
 
   /** The store-served cluster ASSIGNMENT as a public relation — (vec_id,
     * cluster_id) through the store's FROZEN quantizer, flat or hier,

@@ -3,7 +3,6 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ext.Materialize._
 
 /** Text-analysis operators for LLM-data pipelines (SURVEY.md §2.8 E3):
   * quality scoring, token counting, document fingerprinting, and language
@@ -21,10 +20,6 @@ import graft.ext.Materialize._
   * doubles.
   */
 object TextAnalysis {
-
-  /** Stop tokens for the synthetic corpus vocabulary (the two function
-    * words the generator uses). */
-  val stopwords: Seq[String] = Seq("a", "the")
 
   /** The composite quality score as a column expression over `text` —
     * shared by the batch [[quality]] report and the streaming ingest gate
@@ -832,7 +827,7 @@ object TextAnalysis {
     // global counts and the present-term fold all read them; unmaterialized,
     // each reference re-ran the token explode over the corpus.
     val src = tok.groupBy("source", "token").agg(count(lit(1)).as("c_st"))
-      .materialize()
+      .localCheckpoint()
     val srcTot = src.groupBy("source").agg(
       sum("c_st").cast("long").as("n_tokens"),
       count(lit(1)).as("n_distinct"))
@@ -1145,7 +1140,7 @@ object TextAnalysis {
     // r15: materialize the labels once — the train fold filter and the
     // held-out eval join both read them, and the Gopher gate behind them
     // is a full regex/tokenize pass over the corpus.
-    val lab = gopherLabels(docs).materialize()
+    val lab = gopherLabels(docs).localCheckpoint()
     val weights = qualityTrain(docs, lab.filter(col("doc_id") % 5 =!= 0), dim)
     qualityScoreWith(docs.filter(col("doc_id") % 5 === 0), weights, dim)
       .join(lab, "doc_id")
@@ -1364,7 +1359,7 @@ object TextAnalysis {
   def qualityModelEval(docs: DataFrame, dim: Int = 256): DataFrame = {
     // r15: materialize the held-out predictions — cell counts and class
     // totals both aggregate them (two full train+score runs otherwise).
-    val preds = qualityModel(docs, dim).materialize()
+    val preds = qualityModel(docs, dim).localCheckpoint()
     val n = preds.groupBy("label", "pred").agg(count(lit(1)).cast("long").as("n"))
     val tot = preds.groupBy("label").agg(count(lit(1)).cast("long").as("n_label"))
     n.join(broadcast(tot), "label")
@@ -1431,7 +1426,7 @@ object TextAnalysis {
     // r15: materialize the per-doc predictions — both the cell counts and
     // the class totals aggregate them, and unmaterialized each reference
     // re-ran the whole langId train+score pipeline.
-    val preds = langId(docs).materialize()
+    val preds = langId(docs).localCheckpoint()
     val n = preds.groupBy("actual", "pred_lang").agg(count(lit(1)).as("n"))
     val tot = preds.groupBy("actual").agg(count(lit(1)).as("n_actual"))
     n.join(broadcast(tot), "actual")
@@ -1533,7 +1528,7 @@ object TextAnalysis {
     // trained twin, the whole trained-quantizer assignment scan).
     val tf = toks.groupBy("cluster_id", "term")
       .agg(count(lit(1)).cast("long").as("tf"))
-      .materialize()
+      .localCheckpoint()
     val df = tf.groupBy("term")
       .agg(count(lit(1)).cast("long").as("df_clusters"))
     val nc = tf.select("cluster_id").distinct()

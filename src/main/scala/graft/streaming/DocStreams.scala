@@ -113,31 +113,40 @@ object DocStreams {
     * latency, dominates. */
   def dedupAgainstStore(docs: DataFrame, storeDir: String,
                         threshold: Double = 0.8,
-                        watermark: String = "1 hour"): DataFrame = {
+                        watermark: String = "1 hour"): DataFrame =
+    probeBandStore(docs, storeDir, threshold, watermark)
+      .groupBy(window(col("ingest_ts"), "10 minutes"), col("id"), col("hist_id"))
+      .agg(max(expr("round(jacc, 6)")).as("jaccard"))
+      .select(col("id").as("inc_id"), col("hist_id"), col("jaccard"))
+
+  /** The banded store probe both stored stream twins share: each arriving
+    * doc is banded with the batch expressions, stream-static-joined
+    * against the store's `bands` then `hashes` relations, and verified
+    * with exact Jaccard → (id, ingest_ts, hist_id, jacc), one row per
+    * COLLIDING band. Shingle-less docs never probe — the batch sides'
+    * empty-signature guard (see Dedup.minhashLsh's note), mirrored here.
+    * The filter is on the UNROUNDED value and callers round when they
+    * emit — the batch twins' exact order of operations (a 0.7999996 must
+    * not round into range). */
+  private def probeBandStore(docs: DataFrame, storeDir: String,
+                             threshold: Double, watermark: String): DataFrame = {
     val spark = docs.sparkSession
     graft.functions.GraftFunctions.register(spark)
     val histBands = graft.ext.Dedup.readBandStore(spark, storeDir, "bands")
     val histHashes = graft.ext.Dedup.readBandStore(spark, storeDir, "hashes")
-    val streamBands = docs
-      .withWatermark("ingest_ts", watermark)
-      .select(col("doc_id").as("inc_id"), col("ingest_ts"),
+    docs.withWatermark("ingest_ts", watermark)
+      .select(col("doc_id").as("id"), col("ingest_ts"),
         expr("shingle_hash60(text, 3)").as("si"))
-      // shingle-less docs never probe — the batch sides' empty-signature
-      // guard (see Dedup.minhashLsh's note), mirrored here
       .filter(expr("size(si) > 0"))
       .withColumn("sig", expr("minhash_sig(si)"))
-      .select(col("inc_id"), col("ingest_ts"), col("si"),
+      .select(col("id"), col("ingest_ts"), col("si"),
         posexplode(expr(graft.ext.Dedup.bandSigsExpr)).as(Seq("band", "bsig")))
-    streamBands.join(histBands, Seq("band", "bsig"))
+      .join(histBands, Seq("band", "bsig"))
       .join(histHashes, "hist_id")
       .withColumn("c", expr("size(array_intersect(si, sh))"))
-      // filter on the UNROUNDED value, emit rounded — the batch twin's
-      // exact order of operations (a 0.7999996 must not round into range)
-      .withColumn("jaccard", expr("c / (size(si) + size(sh) - c)"))
-      .filter(col("jaccard") >= threshold)
-      .groupBy(window(col("ingest_ts"), "10 minutes"), col("inc_id"), col("hist_id"))
-      .agg(max(expr("round(jaccard, 6)")).as("jaccard"))
-      .select(col("inc_id"), col("hist_id"), col("jaccard"))
+      .withColumn("jacc", expr("c / (size(si) + size(sh) - c)"))
+      .filter(col("jacc") >= threshold)
+      .select(col("id"), col("ingest_ts"), col("hist_id"), col("jacc"))
   }
 
   /** Streaming FUZZY decontamination against the PRECOMPUTED eval band
@@ -153,31 +162,13 @@ object DocStreams {
     * probe under random micro-batch splits. */
   def decontaminateFuzzyStream(docs: DataFrame, evalBandStoreDir: String,
                                threshold: Double = 0.8,
-                               watermark: String = "1 hour"): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val evalBands = graft.ext.Dedup.readBandStore(spark, evalBandStoreDir, "bands")
-    val evalHashes = graft.ext.Dedup.readBandStore(spark, evalBandStoreDir, "hashes")
-    val banded = docs.withWatermark("ingest_ts", watermark)
-      .select(col("doc_id").as("train_id"), col("ingest_ts"),
-        expr("shingle_hash60(text, 3)").as("si"))
-      .filter(expr("size(si) > 0")) // the batch sides' empty-signature guard
-      .withColumn("sig", expr("minhash_sig(si)"))
-      .select(col("train_id"), col("ingest_ts"), col("si"),
-        posexplode(expr(graft.ext.Dedup.bandSigsExpr)).as(Seq("band", "bsig")))
-    banded.join(evalBands, Seq("band", "bsig"))
-      .join(evalHashes, "hist_id")
-      .withColumn("c", expr("size(array_intersect(si, sh))"))
-      // filter on the UNROUNDED value, rank/emit rounded — the batch
-      // twin's exact order of operations
-      .withColumn("jacc", expr("c / (size(si) + size(sh) - c)"))
-      .filter(col("jacc") >= threshold)
-      .groupBy(window(col("ingest_ts"), "10 minutes"), col("train_id"))
+                               watermark: String = "1 hour"): DataFrame =
+    probeBandStore(docs, evalBandStoreDir, threshold, watermark)
+      .groupBy(window(col("ingest_ts"), "10 minutes"), col("id"))
       .agg(max(struct(expr("round(jacc, 6)").as("j"),
         (-col("hist_id")).as("ne"))).as("best"))
-      .select(col("train_id"), (-col("best.ne")).as("eval_id"),
+      .select(col("id").as("train_id"), (-col("best.ne")).as("eval_id"),
         col("best.j").as("jaccard"))
-  }
 
   /** Streaming SUBSTRING-SPAN dedup against the PRECOMPUTED window-hash
     * store ([[graft.ext.Dedup.buildSpanStore]]) — the continuous twin of
@@ -557,19 +548,6 @@ object DocStreams {
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
   }
 
-  /** A micro-batch replays from its source offsets on failure, so nothing
-    * inside a `foreachBatch` body needs a reliable checkpoint: its own
-    * materializations are `localCheckpoint`, and this pins the batch
-    * operators it calls (their `materialize()` seam) to the local path
-    * too. Under `spark.graft.materialize.reliable=true` they would
-    * otherwise leave never-cleaned checkpoint directories on every
-    * trigger. `batch` runs on the stream's own cloned session, so the
-    * caller's session keeps its conf. */
-  private def localOnly(batch: DataFrame): DataFrame = {
-    batch.sparkSession.conf.set("spark.graft.materialize.reliable", "false")
-    batch
-  }
-
   /** The full CONTINUOUS CORPUS LOOP — streaming ingest that GROWS the
     * historical band store it dedups against: per micro-batch,
     *
@@ -602,7 +580,7 @@ object DocStreams {
       .parquet(srcDir)
     docs.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = localOnly(batch).select("doc_id", "text", "lang", "source").localCheckpoint()
+        val b = batch.select("doc_id", "text", "lang", "source").localCheckpoint()
         val hitStore = graft.ext.Dedup
           .incrementalStored(b.select("doc_id", "text"), storeDir, threshold)
           .select(col("inc_id").as("doc_id")).distinct()
@@ -662,7 +640,7 @@ object DocStreams {
     docs.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // one materialization feeds both the probe and the store append
-        val b = localOnly(batch).select("doc_id", "text").localCheckpoint()
+        val b = batch.select("doc_id", "text").localCheckpoint()
         graft.ext.Dedup.spanDedupOnceStored(b, storeDir, k)
           .write.mode("append").parquet(outDir)
         graft.ext.Dedup.appendToSpanStore(b, storeDir, k)

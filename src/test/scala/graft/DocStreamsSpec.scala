@@ -104,36 +104,6 @@ class DocStreamsSpec extends AnyFunSuite {
     assert(storeIds === Seq(2L, 4L, 6L, 100L))
   }
 
-  test("store ingest loop under materialize.reliable=true leaves no RDD checkpoint files per micro-batch") {
-    val base = java.nio.file.Files.createTempDirectory("store_ingest_reliable").toString
-    val src = s"$base/src"; val out = s"$base/out"
-    val ckpt = s"$base/ckpt"; val store = s"$base/store"
-    def words(seed: String) = (1 to 40).map(i => s"$seed$i").mkString(" ")
-    Dedup.buildBandStore(Seq((100L, words("hist"))).toDF("doc_id", "text"), store)
-    Seq(d(1, 1000, words("hist")), d(2, 2000, words("a")))
-      .toDS().coalesce(1).write.parquet(src)
-    Seq(d(3, 61000, words("a")), d(4, 62000, words("b")))
-      .toDS().coalesce(1).write.mode("append").parquet(src)
-    val rddDirs = () => {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(SparkTestSession.checkpointDir))
-      try s.filter(_.getFileName.toString.startsWith("rdd-")).toArray.map(_.toString).toSet
-      finally s.close()
-    }
-    val before = rddDirs()
-    spark.conf.set("spark.graft.materialize.reliable", "true")
-    try {
-      val q = DocStreams.runStoreIngest(spark, src, store, out, ckpt, maxFilesPerTrigger = Some(1))
-      try q.processAllAvailable() finally q.stop()
-      assert(q.recentProgress.count(_.numInputRows > 0) === 2, "expected two micro-batches")
-      assert(spark.conf.get("spark.graft.materialize.reliable") === "true",
-        "the stream must not rewrite the caller's session conf")
-    } finally spark.conf.set("spark.graft.materialize.reliable", "false")
-    assert(spark.read.parquet(out).collect().map(_.getAs[Long]("doc_id")).sorted.toSeq
-      === Seq(2L, 4L))
-    val leaked = rddDirs() -- before
-    assert(leaked.isEmpty, s"micro-batches wrote reliable checkpoints: $leaked")
-  }
-
   test("span-dedup ingest loop: streaming keep-first manifests equal the batch probe→append replay over the same micro-batches") {
     // VERDICT r14 #4: the stored keep-first form's continuous front door.
     // The stream IS spanDedupOnceStored + appendToSpanStore per trigger,

@@ -154,8 +154,6 @@ class ExtDedupSpec extends AnyFunSuite {
     assert(fastRounds <= 10, s"shortcut took $fastRounds rounds")
   }
 
-  private val maxLocalEdgesKey = "spark.graft.clusters.maxLocalEdges"
-
   private def labelMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
@@ -175,9 +173,7 @@ class ExtDedupSpec extends AnyFunSuite {
     for (pairs <- Seq(chain, minLabel, dense)) {
       val (local, localRounds) = Dedup.clustersWithRounds(pairs)
       val reference = labelMap(Dedup.clustersWithRounds(pairs, shortcut = false)._1)
-      spark.conf.set(maxLocalEdgesKey, "0")
-      val (distributed, distRounds) =
-        try Dedup.clustersWithRounds(pairs) finally spark.conf.unset(maxLocalEdgesKey)
+      val (distributed, distRounds) = Dedup.clustersWithRounds(pairs, maxLocalEdges = 0)
       assert(localRounds === 1)
       assert(distRounds >= 2, "the 0 ceiling must take the distributed path")
       assert(labelMap(local) === reference)
@@ -210,16 +206,6 @@ class ExtDedupSpec extends AnyFunSuite {
       "editDistanceVerified" -> SparkTestSession.jobsIn(Dedup.editDistanceVerified(docs))._2)
     assert(jobs === Seq("ngramJaccard" -> 2, "containment" -> 2,
       "editDistanceVerified" -> 6))
-  }
-
-  test("a malformed or negative maxLocalEdges conf fails loudly, naming the key") {
-    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
-    for (bad <- Seq("4M", "-1")) {
-      spark.conf.set(maxLocalEdgesKey, bad)
-      val e = try intercept[IllegalArgumentException](Dedup.clusters(pairs))
-        finally spark.conf.unset(maxLocalEdgesKey)
-      assert(e.getMessage.contains(maxLocalEdgesKey) && e.getMessage.contains(bad))
-    }
   }
 
   test("sourceOverlap: identical sources estimate 1.0, disjoint near 0") {

@@ -8,16 +8,6 @@ object SparkTestSession {
   lazy val spark: SparkSession = GraftSession(4)
   val sfDir = "/root/testdata/sf0.001"
 
-  /** The reliable-checkpoint dir, one per test JVM and removed when the
-    * JVM exits. Spark's checkpoint dir is JVM-global and cannot be unset,
-    * so no suite may delete it; suites that need it share this one. */
-  lazy val checkpointDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toFile
-    sys.addShutdownHook(graft.ops.Scale.deleteRecursively(dir))
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    dir.toString
-  }
-
   /** `body`'s result and the Spark jobs it starts, counted under a job
     * group. A marker job in another group drains the listener bus: the bus
     * delivers in order, so once the marker's end arrives every event of
